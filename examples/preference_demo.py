@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from storm_dynamic_spout_spark.engine import EngineConfig, build_session, load_table
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 
 SF = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
 BATCHES = 4
@@ -96,7 +97,7 @@ def main() -> int:
     )
 
     # -- 2. batch fit ---------------------------------------------------------
-    comp = comparison_log(spark).localCheckpoint(eager=True)
+    comp = local_checkpoint(comparison_log(spark), eager=True)
     n_comp = comp.count()
     batch_fit = {
         r["item"]: r

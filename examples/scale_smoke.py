@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.engine import EngineConfig, build_session, load_table
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 COPIES = int(os.environ.get("SCALE_COPIES", "5"))
@@ -659,10 +660,11 @@ def triangle_close(t):
         (_spatial_coord("x") + copy_off).alias("ux"),
         (_spatial_coord("y") + copy_off).alias("uy"),
     )
-    edges = grid_neighbor_pairs(pts, "id", "ux", "uy", 1_500).select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    ).localCheckpoint(eager=False)
+    edges = local_checkpoint(
+        grid_neighbor_pairs(pts, "id", "ux", "uy", 1_500).select(
+            F.col("id_a").alias("a"), F.col("id_b").alias("b")
+        )
+    )
     return degree_oriented_triangles(edges).agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
@@ -681,7 +683,7 @@ def countmin_cells(t):
 
 def kcore_peel(t):
     """graph_kcore shape: per-round degree aggregate + two broadcast
-    semi-joins with a localCheckpoint between rounds (timing includes
+    semi-joins with a checkpoint between rounds (timing includes
     the checkpoint jobs — that IS the production cost model).  On
     key-shifted copies the graph is 5 disjoint replicas, so healthy
     scaling is ~linear."""
@@ -700,7 +702,7 @@ def kcore_peel(t):
         edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
     for _ in range(4):
-        sym = sym.localCheckpoint(eager=True)
+        sym = local_checkpoint(sym, eager=True)
         surv = (
             sym.groupBy("u")
             .agg(F.count(F.lit(1)).alias("d"))
@@ -954,13 +956,11 @@ def ab_test_readout(t):
     aggregate — checkpoint-shared by four branches — then |types|-row
     broadcasts and a |types|x2-cell closing aggregate.  Healthy
     scaling is ~linear in events; the z/t math is constant-size."""
-    per = (
+    per = local_checkpoint(
         t("events")
         .groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("val"))
-        # lazy checkpoint: subtree must be deterministic (see
-        # operators/dedup.py DETERMINISM note) — static-scan count/sum.
-    ).localCheckpoint(eager=False)
+    )
     users = per.select("user_id").distinct()
     types = per.select("event_type").distinct()
     nu = users.agg(F.count(F.lit(1)).alias("n_users"))
@@ -1075,10 +1075,11 @@ def clustering_coeff(t):
         _spatial_coord("x").alias("ux"),
         _spatial_coord("y").alias("uy"),
     )
-    edges = grid_neighbor_pairs(pts, "id", "ux", "uy", 1_500).select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    # lazy checkpoint: deterministic subtree (operators/dedup.py note)
-    ).localCheckpoint(eager=False)
+    edges = local_checkpoint(
+        grid_neighbor_pairs(pts, "id", "ux", "uy", 1_500).select(
+            F.col("id_a").alias("a"), F.col("id_b").alias("b")
+        )
+    )
     deg = (
         edges.select(F.col("a").alias("id"))
         .unionByName(edges.select(F.col("b").alias("id")))

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.catalog.registry import query, t
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 
 
 @query(
@@ -556,14 +557,10 @@ def agg_histogram_percentile_rollup(spark: SparkSession, sf_dir: str) -> DataFra
         F.col("value").cast("double").alias("v"),
         F.to_date("ts").alias("__day"),
     )
-    # lazy checkpoints: subtrees must be deterministic (see
-    # operators/dedup.py DETERMINISM note).  rng (1 row) and merged
-    # (|type|x|bins| rows) each have multiple consumers; without the
-    # checkpoints every consumer re-binned the corpus (r15 plan: 7
-    # events scans for one rollup)
-    rng = e.agg(F.min("v").alias("lo"), F.max("v").alias("hi")).localCheckpoint(
-        eager=False
-    )
+    # rng (1 row) and merged (|type|x|bins| rows) each have multiple
+    # consumers; without the checkpoints every consumer re-binned the
+    # corpus (r15 plan: 7 events scans for one rollup)
+    rng = local_checkpoint(e.agg(F.min("v").alias("lo"), F.max("v").alias("hi")))
     width = (F.col("hi") - F.col("lo")) / HIST_BINS
     binned = e.crossJoin(F.broadcast(rng)).withColumn(
         "bin",
@@ -577,11 +574,9 @@ def agg_histogram_percentile_rollup(spark: SparkSession, sf_dir: str) -> DataFra
         F.count(F.lit(1)).alias("cnt")
     )
     # ... merged upward by ADDITION — the mergeability demonstration
-    merged = (
+    merged = local_checkpoint(
         daily.groupBy("event_type", "bin")
         .agg(F.sum("cnt").alias("cnt"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     cum = merged.withColumn(
         "cum",
@@ -987,14 +982,10 @@ def agg_countmin_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket hash, so cell counts, min-over-depth, and the overshoot are
     all value-checked."""
     li = t(spark, sf_dir, "lineitem")
-    # lazy checkpoint: subtree must be deterministic (see
-    # operators/dedup.py DETERMINISM note) — shared by the sketch
-    # derivation and the probe top-k
-    exact = (
+    # shared by the sketch derivation and the probe top-k
+    exact = local_checkpoint(
         li.groupBy("l_partkey")
         .agg(F.count(F.lit(1)).alias("exact_n"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     probes = exact.orderBy(F.desc("exact_n"), "l_partkey").limit(CMS_PROBES)
     from storm_dynamic_spout_spark.operators.sketch import countmin_bucket
@@ -1104,9 +1095,8 @@ def agg_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-expands the full distinct+TakeOrdered lineage (a fresh orders
     # scan) per reference — the sketches are the thing that must NOT
     # rescan raw data
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    ka = kmv_sketch(seg("1-URGENT"), "o_custkey", KMV_K).localCheckpoint(eager=False)
-    kb = kmv_sketch(seg("2-HIGH"), "o_custkey", KMV_K).localCheckpoint(eager=False)
+    ka = local_checkpoint(kmv_sketch(seg("1-URGENT"), "o_custkey", KMV_K))
+    kb = local_checkpoint(kmv_sketch(seg("2-HIGH"), "o_custkey", KMV_K))
     theta = ka.agg(F.max("h").alias("ta")).crossJoin(
         kb.agg(F.max("h").alias("tb"))
     ).select(F.least("ta", "tb").alias("theta"))

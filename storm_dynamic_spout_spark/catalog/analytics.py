@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.catalog.registry import query, t
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 
 _TS = "CAST(ts AS TIMESTAMP)"  # DuckDB: TIMESTAMP_NS → µs precision
 
@@ -269,15 +270,12 @@ def events_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     differently-shaped branches); the closing left join broadcasts the
     tiny daily counts against the driver-free grid."""
     e = t(spark, sf_dir, "events")
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  daily feeds span, types and the closing
-    # join — the executed plan re-scanned events per consumer (the
-    # ReusedExchange the docstring hoped for never fired)
-    daily = (
+    # daily feeds span, types and the closing join — the executed plan
+    # re-scanned events per consumer (the ReusedExchange the docstring
+    # hoped for never fired)
+    daily = local_checkpoint(
         e.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(F.count("*").alias("n"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     span = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     days = span.select(
@@ -597,15 +595,12 @@ def events_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     e = t(spark, sf_dir, "events")
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  daily feeds four consumers (span, observed,
-    # types, the grid reattach) — each re-ran the events scan + the
-    # daily aggregate without it (4 events scans)
-    daily = (
+    # daily feeds four consumers (span, observed, types, the grid
+    # reattach) — each re-ran the events scan + the daily aggregate
+    # without it (4 events scans)
+    daily = local_checkpoint(
         e.groupBy("event_type", F.to_date("ts").alias("day"))
         .agg(F.count(F.lit(1)).alias("n"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     span = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     days = span.select(F.explode(F.sequence("lo", "hi")).alias("day"), "lo")
@@ -685,14 +680,12 @@ def events_dau_wau_mau(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events").select(
         "user_id", F.to_date("ts").alias("day")
     )
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  The distinct (user, day) table is the shared
-    # sufficient statistic for all three granularities — without it
-    # each level re-scanned raw events (3 scans); countDistinct per
-    # level is unchanged because (user, day) dedup never merges users
-    # within any coarser bucket
-    # deterministic subtree (operators/dedup.py DETERMINISM note)
-    ud = e.distinct().localCheckpoint(eager=False)
+    # The distinct (user, day) table is the shared sufficient
+    # statistic for all three granularities — without it each level
+    # re-scanned raw events (3 scans); countDistinct per level is
+    # unchanged because (user, day) dedup never merges users within
+    # any coarser bucket
+    ud = local_checkpoint(e.distinct())
 
     def level(label: str, bucket: F.Column) -> DataFrame:
         return (
@@ -850,10 +843,9 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted explicitly, the guide-§2 shared-subtree rule."""
     o = t(spark, sf_dir, "orders")
     max_date = o.agg(F.max("o_orderdate").alias("__mx"))
-    # lazy checkpoint: subtree must be deterministic (see
-    # operators/dedup.py DETERMINISM note) — exact aggregate + scalar
-    # broadcast, shared by the cuts and scoring consumers
-    per_cust = (
+    # exact aggregate + scalar broadcast, shared by the cuts and
+    # scoring consumers
+    per_cust = local_checkpoint(
         o.groupBy("o_custkey")
         .agg(
             F.max("o_orderdate").alias("__last"),
@@ -867,8 +859,6 @@ def orders_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "frequency",
             F.round("__mon", 2).alias("monetary"),
         )
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     cuts = per_cust.agg(
         *[
@@ -948,7 +938,7 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     all-pairs across parts, and never a two-sided self-join shuffle);
     partial aggregation shrinks the pair shuffle to |distinct pairs|.
     The part marginals and the order count derive from the same
-    per-order aggregate, which is localCheckpoint'd so its exchange is
+    per-order aggregate, which is checkpointed so its exchange is
     paid once across the three consumers (pairs, marginals, total) —
     previously each branch re-ran the lineitem scan + orderkey
     aggregate (4 scans in the executed plan); the marginal table is
@@ -959,9 +949,11 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, so no shuffle is keyed on the full pair set twice.  Ties at
     the count threshold break deterministically on (part_a, part_b)."""
     li = t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    items = li.groupBy("l_orderkey").agg(
-        F.array_sort(F.collect_set("l_partkey")).alias("__parts")
-    ).localCheckpoint(eager=False)
+    items = local_checkpoint(
+        li.groupBy("l_orderkey").agg(
+            F.array_sort(F.collect_set("l_partkey")).alias("__parts")
+        )
+    )
     tot = items.select(F.count(F.lit(1)).cast("long").alias("__tot"))
     pair_arr = F.flatten(
         F.transform(
@@ -979,12 +971,11 @@ def orders_market_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("n_orders"))
     )
     top = pairs.orderBy(F.desc("n_orders"), "part_a", "part_b").limit(BASKET_TOP)
-    marg = (
+    marg = local_checkpoint(
         items.select(F.explode("__parts").alias("l_partkey"))
         .groupBy("l_partkey")
         .agg(F.count(F.lit(1)).cast("long").alias("n_part"))
-    # deterministic subtree (operators/dedup.py DETERMINISM note)
-    ).localCheckpoint(eager=False)
+    )
     ma = marg.select(F.col("l_partkey").alias("part_a"), F.col("n_part").alias("__na"))
     mb = marg.select(F.col("l_partkey").alias("part_b"), F.col("n_part").alias("__nb"))
     enriched = ma.join(F.broadcast(top.crossJoin(tot)), "part_a")
@@ -1289,15 +1280,12 @@ def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     med = e.groupBy("event_type").agg(
         F.percentile("value", 0.5).alias("__med")
     )
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  dev feeds the MAD aggregate AND the final
-    # outlier pass — without it both consumers re-ran the events scan
-    # and the median aggregate (4 events scans for a two-pass MAD)
-    dev = (
+    # dev feeds the MAD aggregate AND the final outlier pass — without
+    # it both consumers re-ran the events scan and the median
+    # aggregate (4 events scans for a two-pass MAD)
+    dev = local_checkpoint(
         e.join(F.broadcast(med), "event_type")
         .withColumn("__dev", F.abs(F.col("value") - F.col("__med")))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     mad = dev.groupBy("event_type").agg(
         F.percentile("__dev", 0.5).alias("__mad")
@@ -1436,10 +1424,11 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # referenced by both the triangle close and the n_edges branch:
     # materialize the spatial join once (the common_neighbors/kcore
     # checkpoint rationale) instead of deriving it per alias
-    edges = grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    ).localCheckpoint(eager=False)
+    edges = local_checkpoint(
+        grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
+            F.col("id_a").alias("a"), F.col("id_b").alias("b")
+        )
+    )
     tri = degree_oriented_triangles(edges).agg(
         F.count(F.lit(1)).alias("n_triangles")
     )
@@ -1493,25 +1482,20 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-specific month-diff semantics are in play."""
     from pyspark.sql.window import Window
 
-    # lazy checkpoints: deterministic subtrees (operators/dedup.py
-    # DETERMINISM note).  o feeds the first-order aggregate AND the
-    # fact probe; first feeds the cohort sizes AND the probe join —
-    # without them orders was scanned three times
-    o = (
+    # o feeds the first-order aggregate AND the fact probe; first
+    # feeds the cohort sizes AND the probe join — without them orders
+    # was scanned three times
+    o = local_checkpoint(
         t(spark, sf_dir, "orders")
         .select(
             "o_custkey",
             (F.year("o_orderdate") * 12 + F.month("o_orderdate")).alias("ym"),
             F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
         )
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
-    # deterministic subtree (operators/dedup.py DETERMINISM note)
-    first = (
+    first = local_checkpoint(
         o.groupBy("o_custkey")
         .agg(F.min("ym").alias("cohort_ym"))
-        .localCheckpoint(eager=False)
     )
     cohorts = first.groupBy("cohort_ym").agg(
         F.count(F.lit(1)).alias("cohort_size")
@@ -1799,10 +1783,11 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # wedge sides embed sym = 2x edges each, plus the anti-join);
     # checkpoint it once or Catalyst re-derives the whole grid join
     # per reference (the kcore/minhash materialize rationale)
-    edges = grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    ).localCheckpoint(eager=False)
+    edges = local_checkpoint(
+        grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
+            F.col("id_a").alias("a"), F.col("id_b").alias("b")
+        )
+    )
     sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -1900,11 +1885,11 @@ def graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # referenced by both wedge sides, the degree table and the
     # anti-join — checkpoint once (the graph_common_neighbors rationale)
-    # lazy checkpoint: subtree must be deterministic (see
-    # operators/dedup.py DETERMINISM note)
-    edges = grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    ).localCheckpoint(eager=False)
+    edges = local_checkpoint(
+        grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
+            F.col("id_a").alias("a"), F.col("id_b").alias("b")
+        )
+    )
     sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
         edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
     )
@@ -2064,7 +2049,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     all equi-joins on node id, no all-pairs anywhere; survivor sets
     shrink monotonically so later rounds broadcast.  Production runs
     to convergence with a driver-side emptiness check per round and
-    localCheckpoint every few rounds to truncate lineage (the
+    checkpoint every few rounds to truncate lineage (the
     connected-components pattern, operators/dedup.py); the
     fixed-round form keeps the query a single deterministic Catalyst
     DAG for the oracle gate."""
@@ -2087,8 +2072,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         # semi-join sides); without a checkpoint the spatial-join
         # subtree duplicates ~3^rounds across the unrolled plan (the
         # minhash materialize= rationale, operators/dedup.py:148)
-        # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-        sym = sym.localCheckpoint(eager=False)
+        sym = local_checkpoint(sym)
         surv = (
             sym.groupBy("u")
             .agg(F.count(F.lit(1)).alias("__deg"))
@@ -2158,11 +2142,7 @@ def stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = e.filter(F.col("event_id") % 2 == parity).select("user_id")
         # two consumers below (counters + totals) — checkpoint so the
         # Arrow sketch pass runs once per batch, not per consumer
-        # lazy checkpoint: subtree must be deterministic (see
-        # operators/dedup.py DETERMINISM note) — parquet scan + filter
-        summ = partition_mg_summaries(batch, "user_id", _SHH_K).localCheckpoint(
-            eager=False
-        )
+        summ = local_checkpoint(partition_mg_summaries(batch, "user_id", _SHH_K))
         batch_totals.append(
             summ.filter(F.col("user_id").isNull()).agg(
                 F.coalesce(F.sum("part_rows"), F.lit(0)).alias("n")
@@ -2262,10 +2242,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
         F.col("id_a").alias("a"), F.col("id_b").alias("b")
     )
-    sym = edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    ).localCheckpoint(eager=False)
+    sym = local_checkpoint(
+        edges.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
+            edges.select(F.col("b").alias("u"), F.col("a").alias("v"))
+        )
+    )
     deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     du = deg.select(F.col("u").alias("__u"), F.col("d").alias("du"))
     dv = deg.select(F.col("u").alias("__v"), F.col("d").alias("dv"))
@@ -2567,16 +2548,16 @@ def events_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events")
     # one conditional aggregate per user instead of a second filtered
     # scan + join: min(ts) and min(purchase ts) come out of the same
-    # partial->final pass over the stream.  Lazy checkpoint: subtree
-    # must be deterministic (see operators/dedup.py DETERMINISM note)
-    # — f is |users|-sized with two consumers (the stream-start scalar
-    # below + the duration pass), so the corpus is scanned ONCE (the
-    # r15 plan showed a second ts-only events scan just for min(ts))
-    f = e.groupBy("user_id").agg(
-        F.min("ts").alias("t0"),
-        F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("tp"),
-    # deterministic subtree (operators/dedup.py DETERMINISM note)
-    ).localCheckpoint(eager=False)
+    # partial->final pass over the stream.  f is |users|-sized with two
+    # consumers (the stream-start scalar below + the duration pass), so
+    # the corpus is scanned ONCE (the r15 plan showed a second ts-only
+    # events scan just for min(ts))
+    f = local_checkpoint(
+        e.groupBy("user_id").agg(
+            F.min("ts").alias("t0"),
+            F.min(F.when(F.col("event_type") == "purchase", F.col("ts"))).alias("tp"),
+        )
+    )
     # global stream start == min over the per-user minima — derived
     # from f, not from a separate corpus scan
     b = f.agg(F.min("t0").alias("t_min")).select(
@@ -2729,11 +2710,10 @@ def stream_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     for b in range(_SM_BATCHES):
         rows = batch_sums(e.filter(F.col("event_id") % _SM_BATCHES == b), b)
         state = rows if state is None else state.unionByName(rows)
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  state feeds the seen-watermark derivation
-    # AND the final fold — without it every per-batch aggregate (and
-    # its events scan) re-ran for the watermark
-    state = state.localCheckpoint(eager=False)
+    # state feeds the seen-watermark derivation AND the final fold —
+    # without it every per-batch aggregate (and its events scan)
+    # re-ran for the watermark
+    state = local_checkpoint(state)
     # redelivery: batch 1 arrives again; the batch_id watermark
     # (anti-join on already-folded ids) must drop it entirely
     redelivered = batch_sums(e.filter(F.col("event_id") % _SM_BATCHES == 1), 1)
@@ -2951,14 +2931,11 @@ def events_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     closing aggregate is |types| x 2 cells.  The z/t math is
     closed-form codegen on that tiny result — no window over the full
     frame, no driver math."""
-    per = (
+    per = local_checkpoint(
         t(spark, sf_dir, "events")
         .groupBy("user_id", "event_type")
         .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("val"))
-        # lazy checkpoint: subtree must be deterministic (see
-        # operators/dedup.py DETERMINISM note) — count/sum over a
-        # static scan is.
-    ).localCheckpoint(eager=False)
+    )
     users = per.select("user_id").distinct()
     types = per.select("event_type").distinct()
     nu = users.agg(F.count(F.lit(1)).alias("__n_users"))
@@ -3495,22 +3472,23 @@ def events_ab_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     is_c = F.col("arm") == 0
     is_t = F.col("arm") == 1
-    g = e.groupBy("stratum").agg(
-        F.sum(F.when(is_c, 1).otherwise(0)).cast("bigint").alias("n_c"),
-        F.sum(F.when(is_t, 1).otherwise(0)).cast("bigint").alias("n_t"),
-        F.sum(F.when(is_c, F.col("value")).otherwise(0.0)).alias("__s_c"),
-        F.sum(F.when(is_t, F.col("value")).otherwise(0.0)).alias("__s_t"),
-        F.sum(
-            F.when(is_c, F.col("value") * F.col("value")).otherwise(0.0)
-        ).alias("__ss_c"),
-        F.sum(
-            F.when(is_t, F.col("value") * F.col("value")).otherwise(0.0)
-        ).alias("__ss_t"),
-        # lazy checkpoint below: deterministic subtree (operators/
-        # dedup.py DETERMINISM note).  g feeds the total, the per-
-        # stratum rows and the OVERALL aggregate — each re-scanned
-        # events without it (4 scans for one grouped aggregate)
-    ).localCheckpoint(eager=False)
+    # g feeds the total, the per-stratum rows and the OVERALL aggregate —
+    # each re-scanned events without it (4 scans for one grouped
+    # aggregate)
+    g = local_checkpoint(
+        e.groupBy("stratum").agg(
+            F.sum(F.when(is_c, 1).otherwise(0)).cast("bigint").alias("n_c"),
+            F.sum(F.when(is_t, 1).otherwise(0)).cast("bigint").alias("n_t"),
+            F.sum(F.when(is_c, F.col("value")).otherwise(0.0)).alias("__s_c"),
+            F.sum(F.when(is_t, F.col("value")).otherwise(0.0)).alias("__s_t"),
+            F.sum(
+                F.when(is_c, F.col("value") * F.col("value")).otherwise(0.0)
+            ).alias("__ss_c"),
+            F.sum(
+                F.when(is_t, F.col("value") * F.col("value")).otherwise(0.0)
+            ).alias("__ss_t"),
+        )
+    )
     tot = g.agg(F.sum(F.col("n_c") + F.col("n_t")).alias("__tot"))
     st = g.crossJoin(F.broadcast(tot)).select(
         "stratum",
@@ -3641,12 +3619,12 @@ def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         _spatial_coord("x").alias("ux"),
         _spatial_coord("y").alias("uy"),
     )
-    edges = grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
-        F.col("id_a").alias("a"), F.col("id_b").alias("b")
-    # lazy checkpoint: subtree must be deterministic (see
-    # operators/dedup.py DETERMINISM note) — shared by the degree agg
-    # and the triangle close
-    ).localCheckpoint(eager=False)
+    # shared by the degree agg and the triangle close
+    edges = local_checkpoint(
+        grid_neighbor_pairs(pts, "id", "ux", "uy", _TRI_RADIUS).select(
+            F.col("id_a").alias("a"), F.col("id_b").alias("b")
+        )
+    )
     deg = (
         edges.select(F.col("a").alias("id"))
         .unionByName(edges.select(F.col("b").alias("id")))

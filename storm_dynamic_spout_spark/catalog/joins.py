@@ -735,7 +735,7 @@ def sql_recursive_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys) — each iteration is a narrow map over the frontier, and the
     frontier SHRINKS as paths hit the root; the only shuffle is the
     final per-leaf aggregate.  Unbounded-depth graph walks belong to
-    the localCheckpoint CC operator (operators/dedup.py) — this is the
+    the checkpointed CC operator (operators/dedup.py) — this is the
     bounded-hierarchy shape (org charts, category trees, BOM levels)."""
     from storm_dynamic_spout_spark.engine import register_tables
 

@@ -14,7 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.catalog.registry import query, t
-from storm_dynamic_spout_spark.operators.skew import fan_out_narrow, shared_subtree
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+from storm_dynamic_spout_spark.operators.skew import fan_out_narrow
 from storm_dynamic_spout_spark.operators import dedup as D
 from storm_dynamic_spout_spark.operators import similarity as S
 from storm_dynamic_spout_spark.operators import text as X
@@ -776,15 +777,12 @@ def text_tfidf_top_term(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     d = t(spark, sf_dir, "documents")
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  tf feeds the document-frequency aggregate
-    # AND the ranked join — without it the corpus explode ran twice
-    tf = (
+    # tf feeds the document-frequency aggregate AND the ranked join —
+    # without it the corpus explode ran twice
+    tf = local_checkpoint(
         d.select("doc_id", F.explode(F.split("text", r"\s+")).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     df = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = d.agg(F.count("*").alias("n_docs"))
@@ -2284,7 +2282,9 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     those two materialized passes with map-side partial aggregation."""
     d = t(spark, sf_dir, "documents")
     toks = d.select("doc_id", F.split("text", r"\s+").alias("tk"))
-    big = (
+    # big feeds the bigram counts AND the score join — without it the
+    # bigram explode ran twice
+    big = local_checkpoint(
         toks.filter(F.size("tk") >= 2)
         .select(
             "doc_id",
@@ -2297,20 +2297,13 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p"),
         )
         .select("doc_id", "p.w1", "p.bg")
-        # lazy checkpoint: deterministic subtree (operators/dedup.py
-        # DETERMINISM note).  big feeds the bigram counts AND the
-        # score join — without it the bigram explode ran twice
-        .localCheckpoint(eager=False)
     )
     bgc = big.groupBy("bg").agg(F.count(F.lit(1)).alias("c_bg"))
-    # deterministic subtree (operators/dedup.py DETERMINISM note) —
     # uni feeds the score join AND the vocab-size scalar
-    uni = (
+    uni = local_checkpoint(
         toks.select(F.explode("tk").alias("w1"))
         .groupBy("w1")
         .agg(F.count(F.lit(1)).alias("c_w"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     vocab = uni.agg(F.count(F.lit(1)).alias("n_vocab"))
     return (
@@ -2383,11 +2376,9 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = t(spark, sf_dir, "documents")
-    # lazy checkpoint: deterministic subtree (see operators/dedup.py
-    # DETERMINISM note).  scored feeds three consumers (the running-sum
-    # leg, the bucket totals and the grand total) — without it the
-    # regex quality score ran over the corpus three times (r15 plan:
-    # 3 documents scans)
+    # scored feeds three consumers (the running-sum leg, the bucket
+    # totals and the grand total) — without it the regex quality score
+    # ran over the corpus three times (r15 plan: 3 documents scans)
     scored = (
         d.select(
             "doc_id",
@@ -2402,9 +2393,7 @@ def corpus_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    # deterministic subtree (operators/dedup.py DETERMINISM note);
-    # corpus-scale: shared_subtree dial (fault-tolerance, r16)
-    scored = shared_subtree(scored)
+    scored = local_checkpoint(scored)
     within = F.sum("n_tokens").over(
         Window.partitionBy("__b")
         .orderBy(F.desc("quality"), "doc_id")
@@ -3770,20 +3759,17 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = dd.agg(
         F.count(F.lit(1)).alias("__n_docs"), F.sum("__dl").alias("__sum_dl")
     )
-    # lazy checkpoint: subtree must be deterministic (see
-    # operators/dedup.py DETERMINISM note).  tf is the query-term
-    # posting table (|matching postings| rows, tiny) with TWO
-    # consumers (the df aggregate + the scoring join) — without the
-    # checkpoint each re-runs the corpus-wide explode+filter, the
-    # expensive pass of the whole scorer (guide-§2 shared-subtree
-    # rule; r15 plan showed documents scanned twice for it).
-    tf = (
+    # tf is the query-term posting table (|matching postings| rows,
+    # tiny) with TWO consumers (the df aggregate + the scoring join) —
+    # without the checkpoint each re-runs the corpus-wide
+    # explode+filter, the expensive pass of the whole scorer (guide-§2
+    # shared-subtree rule; r15 plan showed documents scanned twice for
+    # it).
+    tf = local_checkpoint(
         dd.select("doc_id", "__dl", F.explode("__toks").alias("term"))
         .filter(F.col("term").isin(*BM25_TERMS))
         .groupBy("doc_id", "__dl", "term")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     dfx = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     avgdl = F.col("__sum_dl").cast("double") / F.col("__n_docs")
@@ -3984,16 +3970,12 @@ def corpus_dsir_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary ties break by doc_id deterministically)."""
     d = t(spark, sf_dir, "documents")
     tk = d.select("doc_id", "source", F.explode(X.tokens(F.col("text"))).alias("w"))
-    # lazy checkpoint: subtree must be deterministic (see
-    # operators/dedup.py DETERMINISM note) — exact integer counts
-    wc = (
+    wc = local_checkpoint(
         tk.groupBy("w")
         .agg(
             F.count(F.lit(1)).alias("c_a"),
             F.count(F.when(F.col("source") == "src0", F.lit(1))).alias("c_t"),
         )
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     stats = wc.agg(
         F.sum("c_a").alias("n_a"),
@@ -4218,21 +4200,16 @@ def corpus_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents").select(
         "source", F.explode(F.split("text", r"\s+")).alias("term")
     )
-    # lazy checkpoints: subtrees must be deterministic (see
-    # operators/dedup.py DETERMINISM note).  st has three consumers
-    # (ct, s, the grid reattach) and ct two (nv, grid) — without them
-    # the corpus tokenize ran three times per evaluation
-    st = (
+    # st has three consumers (ct, s, the grid reattach) and ct two
+    # (nv, grid) — without them the corpus tokenize ran three times
+    # per evaluation
+    st = local_checkpoint(
         d.groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("c_st"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
-    ct = (
+    ct = local_checkpoint(
         st.groupBy("term")
         .agg(F.sum("c_st").alias("c_t"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     s = st.groupBy("source").agg(F.sum("c_st").alias("n_s"))
     nv = ct.agg(F.count(F.lit(1)).alias("v"), F.sum("c_t").alias("n"))
@@ -4459,19 +4436,15 @@ def text_collocations_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Catalyst re-deriving the full token-stream explode+aggregate for
     # every consuming branch (u1/u2/n_uni would each rescan the corpus
     # — the exchange-reuse trap documented on heavy_hitters_exact)
-    uni = (
+    uni = local_checkpoint(
         pos.groupBy(F.col("w1").alias("w"))
         .agg(F.count(F.lit(1)).alias("c_w"))
-        # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     n_uni = uni.agg(F.sum("c_w").alias("n_uni"))
-    pairs_all = (
+    pairs_all = local_checkpoint(
         pos.filter(F.col("w2").isNotNull())
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c_xy"))
-        # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     # n_pairs folds over the (tiny) aggregated pair table, not the raw
     # token stream — the stream is scanned twice total (uni + pairs)
@@ -4526,7 +4499,7 @@ def zipf_ranked_logs(docs, text_col: str = "text"):
     # offset levels + the ranked side); checkpoint it lazily or each
     # branch re-derives the corpus scan + token explode + aggregate
     # (was 4 file scans / 18 exchanges)
-    freq = (
+    freq = local_checkpoint(
         toks.groupBy("term")
         .agg(F.count(F.lit(1)).alias("f"))
         .withColumn("__b", F.floor(F.log2("f")).cast("int"))
@@ -4534,8 +4507,6 @@ def zipf_ranked_logs(docs, text_col: str = "text"):
             "__h",
             F.pmod(F.xxhash64("term"), F.lit(_ZIPF_TIE_BUCKETS)).cast("int"),
         )
-        # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     run = W.unboundedPreceding, W.currentRow
     cells = freq.groupBy("__b", "f", "__h").agg(F.count(F.lit(1)).alias("__c"))
@@ -4993,9 +4964,7 @@ def ann_topk_ivfpq_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # each side re-runs the whole train+assign subtree (centroid
     # aggregate + corpus-wide argmax fan-out) — the executed plan
     # showed the full assign pipeline twice
-    assigned = ivf_assign_labels(e, "vec_id", "embedding", "label").localCheckpoint(
-        eager=False
-    )
+    assigned = local_checkpoint(ivf_assign_labels(e, "vec_id", "embedding", "label"))
     df = e.select("vec_id", "embedding").join(assigned, "vec_id")
     return pq_topk_ivf_adc(
         df,
@@ -5435,15 +5404,12 @@ def embedding_whitened_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast to the ann_topk_bruteforce plan (broadcast query panel x
     one corpus scan, WindowGroupLimit top-k) — the corpus still never
     self-joins."""
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  The whitened table feeds BOTH sides of the
-    # top-k (query panel + corpus) — without it the stats aggregate
-    # and the whitening join ran twice (4 embeddings scans)
-    w = (
+    # The whitened table feeds BOTH sides of the top-k (query panel +
+    # corpus) — without it the stats aggregate and the whitening join
+    # ran twice (4 embeddings scans)
+    w = local_checkpoint(
         S.whiten_ppm(t(spark, sf_dir, "embeddings"), "vec_id", "embedding")
         .select("vec_id", "white_ppm")
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     res = S.cosine_topk(
         w, "vec_id", "white_ppm", F.col("vec_id") < ANN_QUERY_MAX_ID, ANN_K
@@ -5766,7 +5732,11 @@ def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 1e-6."""
     from pyspark.sql.window import Window as W
 
-    pool = (
+    # the ≤BM25_TOP-row pool feeds BOTH the dcg and the ideal/idcg
+    # legs — without a cut each re-runs the whole BM25 scorer below
+    # (incl. the corpus-wide doc-count/avgdl stats scan: 2 documents
+    # scans in the r15 executed plan)
+    pool = local_checkpoint(
         _bm25_scored(spark, sf_dir)
         .select(
             "doc_id",
@@ -5780,13 +5750,6 @@ def search_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "grade",
             F.row_number().over(W.orderBy(F.desc("__key"), "doc_id")).alias("rank"),
         )
-        # the ≤BM25_TOP-row pool feeds BOTH the dcg and the ideal/idcg
-        # legs — without a cut each re-runs the whole BM25 scorer above
-        # (incl. the corpus-wide doc-count/avgdl stats scan: 2 documents
-        # scans in the r15 executed plan).  Deterministic subtree
-        # (integer sort keys, doc_id tiebreaks — operators/dedup.py
-        # DETERMINISM note), so the lazy checkpoint is safe.
-        .localCheckpoint(eager=False)
     )
     gain = F.pow(F.lit(2.0), F.col("grade")) - 1
     dcg = pool.filter(F.col("rank") <= NDCG_AT).agg(
@@ -5872,7 +5835,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, iters: int):
     semantics symbol for symbol.  No driver-side collect: the winning
     pair flows through ``crossJoin(broadcast(top1))``.
 
-    The word table is localCheckpoint'd (lazily) at the base and after
+    The word table is lazily checkpointed at the base and after
     every merge fold: level i's pair count and level i+1's fold both
     read level i's table, and each level's subtree CONTAINS every
     earlier level's, so without the cut Catalyst re-runs the
@@ -5887,10 +5850,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, iters: int):
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
     )
-    # deterministic subtree (operators/dedup.py DETERMINISM note).
-    # corpus-scale materialization: mechanism is the shared_subtree
-    # deployment dial (fault-tolerance trade-offs measured r16)
-    w = shared_subtree(wc.select("n", X.chars(F.col("word")).alias("syms")))
+    w = local_checkpoint(wc.select("n", X.chars(F.col("word")).alias("syms")))
     tops = []
     for i in range(1, iters + 1):
         # size>=2 guard: Spark's sequence(1, 0) DESCENDS ([1, 0]), so a
@@ -5936,9 +5896,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str, iters: int):
                 ).alias("syms"),
             )
         )
-        # deterministic subtree (operators/dedup.py DETERMINISM note);
-        # corpus-scale: shared_subtree dial (fault-tolerance, r16)
-        w = shared_subtree(w)
+        w = local_checkpoint(w)
     return w, tops
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from storm_dynamic_spout_spark.catalog.registry import query, t
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 
 # ---------------------------------------------------------------------------
 # Image: 24 PNGs covering gray / gray+alpha / RGB / RGBA and (via the
@@ -749,10 +750,11 @@ def multimodal_video_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     # BOTH self-join sides (and the per-video frame counts) —
     # materialize it once or every consumer re-parses and re-hashes
     # every video (the containment_pairs grams rationale)
-    sampled = frame_sample_real(
-        ids.withColumn("content", _payload("doc_id")), n_frames=FRAMES_PER_VIDEO
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    ).select(F.col("doc_id").alias("vid"), "frame_sha").localCheckpoint(eager=False)
+    sampled = local_checkpoint(
+        frame_sample_real(
+            ids.withColumn("content", _payload("doc_id")), n_frames=FRAMES_PER_VIDEO
+        ).select(F.col("doc_id").alias("vid"), "frame_sha")
+    )
     a = sampled.select(F.col("vid").alias("id_a"), F.col("frame_sha").alias("__sha"))
     b = sampled.select(F.col("vid").alias("id_b"), F.col("frame_sha").alias("__sha"))
     pairs = (

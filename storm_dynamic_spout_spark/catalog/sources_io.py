@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.catalog.registry import query, t
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 from storm_dynamic_spout_spark.sources import SourceRegistry
 
 _REGISTRY = SourceRegistry()
@@ -239,22 +240,17 @@ def table_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows union at the end.  The two l_partkey checks share ONE
     lazily-checkpointed distinct-key pass over the lineitem fact, and
     both part-parent key sets derive from ONE part scan (distinct key
-    + does-any-row-pass-the-slice flag) — deterministic subtrees, see
-    operators/dedup.py DETERMINISM note.  This is the standard
+    + does-any-row-pass-the-slice flag).  This is the standard
     dbt-style relationship test, expressed as one catalog query."""
-    lp = (
+    lp = local_checkpoint(
         t(spark, sf_dir, "lineitem")
         .select(F.col("l_partkey").alias("k"))
         .distinct()
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
-    pk = (
+    pk = local_checkpoint(
         t(spark, sf_dir, "part")
         .groupBy(F.col("p_partkey").alias("k"))
         .agg(F.max(F.col("p_size") > 10).alias("__big"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     checks = [
         ("lineitem.l_orderkey -> orders", None, "lineitem", "l_orderkey", "orders", "o_orderkey"),

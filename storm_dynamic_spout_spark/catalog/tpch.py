@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.catalog.registry import query, t
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 
 def _rev() -> F.Column:
     # built lazily: constructing Columns at import time requires an
@@ -597,11 +598,9 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1997-10-01") & (F.col("l_shipdate") < "1998-01-01")
     )
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  rev feeds the scalar max AND the winner
-    # filter — without it the quarter's lineitem slice was scanned and
-    # aggregated twice
-    rev = (
+    # rev feeds the scalar max AND the winner filter — without it the
+    # quarter's lineitem slice was scanned and aggregated twice
+    rev = local_checkpoint(
         li.groupBy(F.col("l_suppkey").alias("supplier_no"))
         .agg(
             F.sum(
@@ -610,8 +609,6 @@ def tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("__total")
         )
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     mx = rev.agg(F.max("__total").alias("__mx"))
     s = t(spark, sf_dir, "supplier")
@@ -656,18 +653,15 @@ def tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = F.broadcast(
         t(spark, sf_dir, "part").filter((F.col("p_brand") == "Brand#23") & (F.col("p_size") < 10))
     )
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  The part filter is ~0.4% selective and the
-    # average is PER PART, so pruning lineitem to matching parts FIRST
-    # leaves every consumed per-part aggregate unchanged; the
-    # checkpointed slice then feeds both the aggregate and the probe —
-    # one lineitem scan instead of two, and the aggregate shuffles the
-    # pruned slice instead of the full fact
-    lp = (
+    # The part filter is ~0.4% selective and the average is PER PART,
+    # so pruning lineitem to matching parts FIRST leaves every
+    # consumed per-part aggregate unchanged; the checkpointed slice
+    # then feeds both the aggregate and the probe — one lineitem scan
+    # instead of two, and the aggregate shuffles the pruned slice
+    # instead of the full fact
+    lp = local_checkpoint(
         li.join(p, li.l_partkey == p.p_partkey)
         .select("l_partkey", "l_quantity", "l_extendedprice")
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     pq = lp.groupBy(F.col("l_partkey").alias("__pk")).agg(
         F.sum(F.col("l_quantity").cast("decimal(25,6)")).alias("__qsum"),
@@ -800,15 +794,11 @@ def tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact decimal bal*cnt > sum, no double-avg boundary flips) +
     NOT EXISTS anti-join + aggregate.
     """
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  The projected customer dim feeds the
-    # balance-stats scalar AND the main filter — one scan instead of
-    # two
-    c = (
+    # The projected customer dim feeds the balance-stats scalar AND
+    # the main filter — one scan instead of two
+    c = local_checkpoint(
         t(spark, sf_dir, "customer")
         .select("c_custkey", "c_acctbal", "c_mktsegment")
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     stats = c.filter(F.col("c_acctbal") > 0).agg(
         F.sum(F.col("c_acctbal").cast("decimal(25,6)")).alias("__bsum"),
@@ -992,15 +982,11 @@ def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         "__val_cents",
         F.round(F.col("ps_supplycost") * 100).cast("long") * F.col("ps_availqty"),
     )
-    # lazy checkpoint: subtree must be deterministic (see
-    # operators/dedup.py DETERMINISM note).  grouped feeds both the
-    # total and the filter probe — without it the partsupp derivation
-    # and its supplier join ran twice
-    grouped = (
+    # grouped feeds both the total and the filter probe — without it
+    # the partsupp derivation and its supplier join ran twice
+    grouped = local_checkpoint(
         de.groupBy("ps_partkey")
         .agg(F.sum("__val_cents").alias("__part_cents"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     total = F.broadcast(grouped.agg(F.sum("__part_cents").alias("__total_cents")))
     return (
@@ -1096,16 +1082,14 @@ def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     red-part list and the region's suppliers broadcast; only lineitem
     and partsupp shuffle. Reference for shape: public TPC-H spec Q20."""
     ps = _partsupp(spark, sf_dir)
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note).  The red-part key list feeds two semi-joins
-    # (lineitem and partsupp) — each broadcast build re-scanned part
-    # without it
+    # The red-part key list feeds two semi-joins (lineitem and
+    # partsupp) — each broadcast build re-scanned part without it
     red = F.broadcast(
-        t(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("red%"))
-        .select("p_partkey")
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
+        local_checkpoint(
+            t(spark, sf_dir, "part")
+            .filter(F.col("p_name").like("red%"))
+            .select("p_partkey")
+        )
     )
     li = (
         t(spark, sf_dir, "lineitem")

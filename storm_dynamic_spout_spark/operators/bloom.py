@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+
 #: Default bitmap geometry: 2^16 bits = 1024 words (8 KiB) with 3 bits
 #: per key gives ~1% false-positive rate up to ~5k keys in the
 #: split-block regime; size m at ~12–16 bits per expected key at scale
@@ -148,9 +150,8 @@ def bloom_prune_join(
     scanning and aggregating the dimension twice.  The key projection
     IS shared: it is lazily checkpointed so the bitmap build and the
     exact join read one materialized dimension scan instead of each
-    re-running it (deterministic subtree required —
-    operators/dedup.py DETERMINISM note)."""
-    keys = small.select(F.col(small_key).alias("__k")).localCheckpoint(eager=False)
+    re-running it."""
+    keys = local_checkpoint(small.select(F.col(small_key).alias("__k")))
     bloom = bloom_build(keys, "__k", m_bits, k_hashes).scalar()
     cand = big.where(bloom_might_contain(bloom, F.col(big_key), m_bits, k_hashes))
     return cand.join(keys, cand[big_key] == keys["__k"], "left_semi")

@@ -11,18 +11,10 @@ buckets (a viral duplicate cluster) are split by AQE skew-join.
 All hashes are md5-derived and engine-portable (identical values in
 Spark and DuckDB), so every operator is oracle-checkable.
 
-DETERMINISM note (applies to every ``localCheckpoint(eager=False)`` in
-this repo; other sites carry a one-line pointer here): a LAZY local
-checkpoint materializes at the FIRST action via RDD-identity stage
-dedup plus block-manager caching, not at build time.  That compute-once
-guarantee is therefore only as strong as the subtree's determinism —
-if a lazily-checkpointed subtree sampled, used wall-clock time, or ran
-a stateful UDF, two concurrent stages feeding differently-aliased
-consumers could race to compute partitions before caching and observe
-DIVERGENT data, a failure mode ``eager=True`` prevents by construction.
-Precondition: only lazily checkpoint DETERMINISTIC subtrees (everything
-here is md5/arithmetic over static parquet, which qualifies); for a
-nondeterministic subtree use ``eager=True`` or ``persist()`` + action.
+Shared subtrees and fixpoint rounds materialize through
+``operators.checkpoint.local_checkpoint``, which refuses a lazy
+checkpoint of a nondeterministic plan (its docstring carries the
+DETERMINISM note).
 """
 
 from __future__ import annotations
@@ -30,7 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from storm_dynamic_spout_spark.operators.skew import fan_out_narrow, shared_subtree
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+from storm_dynamic_spout_spark.operators.skew import fan_out_narrow
 from storm_dynamic_spout_spark.operators.text import (
     content_fingerprint,
     distinct_tokens,
@@ -166,7 +159,7 @@ def lsh_candidate_pairs(
     the same filter jaccard_verify applies; the final pair set is
     unchanged.
 
-    ``materialize``: localCheckpoint the exploded band rows before the
+    ``materialize``: checkpoint the exploded band rows before the
     self-join.  Catalyst does NOT reuse the exchange across the two
     differently-aliased sides, so without this the whole signature
     subtree (8 md5 minhash lambdas over every token) is computed TWICE;
@@ -190,7 +183,7 @@ def lsh_candidate_pairs(
     if sizes is not None and size_ratio is not None:
         bands = bands.join(sizes, id_col)
         if materialize:
-            bands = bands.localCheckpoint(eager=False)
+            bands = local_checkpoint(bands)
         a = bands.select(
             F.col(id_col).alias("id_a"), "band_idx", "__bk", F.col("__n").alias("__na")
         )
@@ -207,7 +200,7 @@ def lsh_candidate_pairs(
         )
     else:
         if materialize:
-            bands = bands.localCheckpoint(eager=False)
+            bands = local_checkpoint(bands)
         a = bands.select(F.col(id_col).alias("id_a"), "band_idx", "__bk")
         c = bands.select(F.col(id_col).alias("id_b"), "band_idx", "__bk")
         joined = a.join(c, ["band_idx", "__bk"]).filter(F.col("id_a") < F.col("id_b"))
@@ -236,7 +229,7 @@ def jaccard_verify(
       min(|A|,|B|)/max(|A|,|B|) ≥ t, so mismatched-size pairs die on two
       int comparisons
     - ``tok_df`` (``(id_col, __toks)`` distinct string tokens) skips
-      re-tokenizing the text; ``materialize`` localCheckpoints the
+      re-tokenizing the text; ``materialize`` checkpoints the
       hashed arrays so the a- and b-side joins scan one computed copy
       instead of hashing every token twice
     """
@@ -252,7 +245,7 @@ def jaccard_verify(
             F.transform(distinct_tokens(F.col(text_col)), token_hash).alias("__toks"),
         ).withColumn("__n", F.size("__toks"))
     if materialize:
-        toks = toks.localCheckpoint(eager=False)
+        toks = local_checkpoint(toks)
     a = toks.select(
         F.col(id_col).alias("id_a"), F.col("__toks").alias("__ta"), F.col("__n").alias("__na")
     )
@@ -301,15 +294,14 @@ def minhash_near_dups(
         cands = lsh_candidate_pairs(sig, id_col, materialize=True)
         return jaccard_verify(cands, df, id_col, text_col, threshold)
 
-    # tokenize ONCE and localCheckpoint: the exact-set key, the
+    # tokenize ONCE and checkpoint: the exact-set key, the
     # signature, the size prune, and the exact verification all read
     # this one materialized token table instead of re-splitting the
     # text per consumer (was: 20 file scans / 16 minhash evaluations
-    # per run — Catalyst can't dedupe differently-aliased subtrees)
-    # deterministic subtree (DETERMINISM note above); fanned out so
-    # the tokenize pass and every checkpoint consumer run wide.
-    # corpus-scale: shared_subtree dial (fault-tolerance, r16)
-    tok = shared_subtree(
+    # per run — Catalyst can't dedupe differently-aliased subtrees);
+    # fanned out so the tokenize pass and every checkpoint consumer
+    # run wide.
+    tok = local_checkpoint(
         fan_out_narrow(df).select(
             F.col(id_col), distinct_tokens(F.col(text_col)).alias("__toks")
         )
@@ -326,9 +318,7 @@ def minhash_near_dups(
     # filter below — without the checkpoint Catalyst re-evaluates the
     # exact-key subtree (md5 over the sorted token array, corpus-wide)
     # plus the groups exchange+aggregate once per aliased copy
-    # deterministic subtree (DETERMINISM note above); corpus-scale:
-    # shared_subtree dial (fault-tolerance, r16)
-    mapping = shared_subtree(
+    mapping = local_checkpoint(
         keyed.join(groups, "__tk").select(F.col(id_col), "__rep", "__gn")
     )
     # a group's rep is its min member id, so reps are exactly the rows
@@ -431,12 +421,11 @@ def simhash_near_pairs(df: DataFrame, id_col: str, text_col: str, max_hamming: i
     LSH band buckets (reusing the minhash bands) so the comparison never
     goes all-pairs."""
     sig = minhash_signature(df, id_col, text_col)
-    # lazy checkpoint: deterministic subtree (DETERMINISM note above).
     # sims feeds BOTH verify-join sides — without it the corpus-wide
     # simhash (a hash per token per bit) computed twice; materialize=
     # True likewise shares the exploded band signature across the
     # candidate self-join sides
-    sims = with_simhash(df, id_col, text_col, "__sh").localCheckpoint(eager=False)
+    sims = local_checkpoint(with_simhash(df, id_col, text_col, "__sh"))
     cands = lsh_candidate_pairs(sig, id_col, materialize=True)
     a = sims.select(F.col(id_col).alias("id_a"), F.col("__sh").alias("sh_a"))
     b = sims.select(F.col(id_col).alias("id_b"), F.col("__sh").alias("sh_b"))
@@ -483,11 +472,10 @@ def full_signature_pairs(sig: DataFrame, id_col: str) -> DataFrame:
     go quadratic; the full signature only collides for (near-)identical
     token sets, keeping the verify join linear in true-dup clusters."""
     key = F.md5(F.concat(*[F.col(f"minhash_{s}") for s in MINHASH_SEEDS]).cast("binary"))
-    # lazy checkpoint: deterministic subtree (operators/dedup.py
-    # DETERMINISM note above).  Both self-join sides consume the keyed
-    # signature — without it the whole 8-hash signature subtree (md5
-    # per token per seed) computed TWICE
-    keyed = sig.select(F.col(id_col), key.alias("__sig")).localCheckpoint(eager=False)
+    # Both self-join sides consume the keyed signature — without it
+    # the whole 8-hash signature subtree (md5 per token per seed)
+    # computed TWICE
+    keyed = local_checkpoint(sig.select(F.col(id_col), key.alias("__sig")))
     a = keyed.select(F.col(id_col).alias("id_a"), "__sig")
     b = keyed.select(F.col(id_col).alias("id_b"), "__sig")
     return a.join(b, "__sig").filter(F.col("id_a") < F.col("id_b")).select("id_a", "id_b")
@@ -501,10 +489,9 @@ def ngram_jaccard_pairs(
     than token Jaccard, so it gets the tighter candidate set)."""
     sig = minhash_signature(df, id_col, text_col)
     cands = full_signature_pairs(sig, id_col)
-    # lazy checkpoint: deterministic subtree (DETERMINISM note above).
     # grams feeds BOTH verify-join sides — without it the char-n-gram
     # explode + hash ran twice over the corpus
-    grams = with_char_ngrams(df, id_col, text_col, n).localCheckpoint(eager=False)
+    grams = local_checkpoint(with_char_ngrams(df, id_col, text_col, n))
     a = grams.select(
         F.col(id_col).alias("id_a"), F.col("__g").alias("__ga"), F.size("__g").alias("__na")
     )
@@ -595,16 +582,15 @@ def _large_star(canon: DataFrame, skew_safe: bool = True) -> DataFrame:
         )
     # min over the OPEN neighborhood; closed-neighborhood min is
     # least(__m0, u), taken per probe row below.
-    # lazy checkpoint: deterministic subtree (min aggregate over the
-    # eager-checkpointed canon).  Load-bearing for skew safety, not
-    # reuse: with the final HashAggregate above the shuffle stage,
-    # AQE's OptimizeSkewedJoin pattern (Sort+ShuffleRead on both
-    # sides) does not match and a power-law hub's partition cannot be
-    # split — measured: skew=true fires only with this materialized
-    mins = (
+    # lazy checkpoint of the min aggregate over the eager-checkpointed
+    # canon.  Load-bearing for skew safety, not reuse: with the final
+    # HashAggregate above the shuffle stage, AQE's OptimizeSkewedJoin
+    # pattern (Sort+ShuffleRead on both sides) does not match and a
+    # power-law hub's partition cannot be split — measured: skew=true
+    # fires only with this materialized
+    mins = local_checkpoint(
         sym.groupBy("__s")
         .agg(F.min("__d").alias("__m0"))
-        .localCheckpoint(eager=False)
     )
     # rows with __d > __s in sym are exactly the swapped canonical
     # edges: (u, v) with v > u ⇔ canonical (v, u)
@@ -644,13 +630,12 @@ def _small_star(canon: DataFrame, skew_safe: bool = True) -> DataFrame:
             .filter(F.col("__s") != F.col("__d"))
             .distinct()
         )
-    # lazy checkpoint: deterministic subtree (min aggregate over the
-    # round's eager-checkpointed edge set); required for AQE skew-join
+    # lazy checkpoint of the min aggregate over the round's
+    # eager-checkpointed edge set; required for AQE skew-join
     # splitting of the join below — see the _large_star mins note
-    mins = (
+    mins = local_checkpoint(
         canon.groupBy("__s")
         .agg(F.min("__d").alias("__m"))
-        .localCheckpoint(eager=False)
     )
     to_min = (
         canon.join(mins, "__s")
@@ -683,8 +668,8 @@ def connected_components(
     (the Pregel/GraphX pattern): each round, a node takes the smallest
     label among itself and its neighbors; converged when a round changes
     nothing. The loop is driver-side but each step is a distributed
-    equi-join + aggregate; ``localCheckpoint`` truncates the growing
-    lineage each round. Rounds needed = graph diameter — right for
+    equi-join + aggregate; an eager ``local_checkpoint`` truncates the
+    growing lineage each round. Rounds needed = graph diameter — right for
     near-dup graphs, whose clusters are shallow.
 
     ``method="star"``: alternating large-star/small-star contraction
@@ -696,7 +681,7 @@ def connected_components(
     (property-tested in tests/test_corpus_properties.py).
     """
     if method == "star":
-        canon = _canonical_edges(pairs, src, dst).localCheckpoint(eager=True)
+        canon = local_checkpoint(_canonical_edges(pairs, src, dst), eager=True)
         n_prev = canon.count()
         for _ in range(max_iter):
             # NOTE (r12 experiment): coalescing the contracted edge set
@@ -713,9 +698,12 @@ def connected_components(
             # AQE-skew-splittable aggregate+join shape — see
             # STAR_SKEW_SAFE_MIN_EDGES for the measured crossover.
             safe = n_prev > STAR_SKEW_SAFE_MIN_EDGES
-            canon2 = _small_star(
-                _large_star(canon, skew_safe=safe), skew_safe=safe
-            ).localCheckpoint(eager=True)
+            canon2 = local_checkpoint(
+                _small_star(
+                    _large_star(canon, skew_safe=safe), skew_safe=safe
+                ),
+                eager=True,
+            )
             # fixpoint test: equal cardinality + one-directional set
             # containment ⇒ set equality (star output is distinct by
             # construction).  isEmpty() short-circuits at the first
@@ -740,10 +728,10 @@ def connected_components(
     if method != "label_prop":
         raise ValueError(f"unknown connected_components method: {method!r}")
     e = pairs.select(F.col(src).alias("__s"), F.col(dst).alias("__d"))
-    edges = (
+    edges = local_checkpoint(
         e.unionByName(e.select(F.col("__d").alias("__s"), F.col("__s").alias("__d")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     labels = nodes.select(F.col(id_col).alias("__n"), F.col(id_col).alias("__l"))
     for _ in range(max_iter):
@@ -752,13 +740,13 @@ def connected_components(
             .groupBy("__s")
             .agg(F.min("__l").alias("__nl"))
         )
-        new = (
+        new = local_checkpoint(
             labels.join(nbr, labels["__n"] == nbr["__s"], "left")
             .select(
                 F.col("__n"),
                 F.least(F.col("__l"), F.coalesce(F.col("__nl"), F.col("__l"))).alias("__l"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         changed = (
             new.join(labels.withColumnRenamed("__l", "__prev"), "__n")
@@ -805,12 +793,13 @@ def containment_pairs(
     # gram hashing is the expensive pass and has FOUR consumers (both
     # candidate-join sides + both verify sides); materialize it once
     # (the minhash materialize= rationale at :148) instead of
-    # re-tokenizing the corpus per reference
-    # deterministic subtree (DETERMINISM note above); fanned out so the
+    # re-tokenizing the corpus per reference; fanned out so the
     # gram-hash pass and its four consumers run wide
-    grams = fan_out_narrow(df).select(
-        F.col(id_col), token_ngram_hashes(F.col(text_col), ngram).alias("__g")
-    ).withColumn("__n", F.size("__g")).localCheckpoint(eager=False)
+    grams = local_checkpoint(
+        fan_out_narrow(df).select(
+            F.col(id_col), token_ngram_hashes(F.col(text_col), ngram).alias("__g")
+        ).withColumn("__n", F.size("__g"))
+    )
     ex = grams.select(id_col, F.explode("__g").alias("__gk"))
     a = ex.select(F.col(id_col).alias("id_a"), "__gk")
     b = ex.select(F.col(id_col).alias("id_b"), "__gk")
@@ -913,7 +902,7 @@ def setsim_prefix_pairs(
 
     Plan at 100 TB: token-frequency aggregate (vocab-sized, shuffle on
     token) → per-doc sorted-token arrays via ONE hash aggregate
-    (shuffle on doc id), pinned with ``localCheckpoint(eager=False)``
+    (shuffle on doc id), pinned with a lazy ``local_checkpoint``
     because FOUR downstream branches read it (index prefix, probe
     prefix, both verify sides) — without the pin, lazy recomputation
     re-runs the tokenize→freq-join→sort subtree once per branch
@@ -934,7 +923,7 @@ def setsim_prefix_pairs(
     # per-doc tokens sorted rarest-first by the global (freq, token)
     # order — struct sort is lexicographic by field position, exactly
     # the old window's orderBy(__freq, __tok)
-    toks = (
+    toks = local_checkpoint(
         exploded.join(freq, "__tok")
         .groupBy("__id")
         .agg(F.array_sort(F.collect_list(F.struct("__freq", "__tok"))).alias("__fs"))
@@ -943,7 +932,6 @@ def setsim_prefix_pairs(
             F.transform("__fs", lambda s: s["__tok"]).alias("__toks"),
             F.size("__fs").alias("__n"),
         )
-        .localCheckpoint(eager=False)
     )
     # probe prefix length n − ⌈t·n⌉ + 1.  The ceil argument is nudged
     # down by 1e-9: float t·n can land an ulp ABOVE the exact rational

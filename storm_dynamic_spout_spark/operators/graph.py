@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+
 
 def pagerank(
     edges: DataFrame,
@@ -44,7 +46,7 @@ def pagerank(
     the distinct union of edge endpoints.  N is carried as
     a broadcast one-row aggregate, never a driver-side collect, so the
     same plan runs on a billion-node edge list.  ``checkpoint_every``
-    truncates lineage with ``localCheckpoint`` the way the CC operator
+    truncates lineage with ``local_checkpoint`` the way the CC operator
     does — without it, k joins stack into one ever-deeper plan and
     Catalyst re-analysis goes quadratic past ~20 rounds.
 
@@ -67,12 +69,13 @@ def pagerank(
     # PageRank implementation does) or Catalyst re-derives the whole
     # upstream edge subtree per iteration — the kcore ~3^rounds plan
     # blow-up (22 scans / 73 exchanges at 3 iterations before this)
-    norm = e.join(out, "__src").select(
-        "__src", "__dst", (F.col("__w") / F.col("__out")).alias("__p")
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    ).localCheckpoint(eager=False)
+    norm = local_checkpoint(
+        e.join(out, "__src").select(
+            "__src", "__dst", (F.col("__w") / F.col("__out")).alias("__p")
+        )
+    )
     nstats = nodes.agg(F.count(F.lit(1)).alias("__n"))
-    base = nodes.crossJoin(F.broadcast(nstats)).localCheckpoint(eager=False)
+    base = local_checkpoint(nodes.crossJoin(F.broadcast(nstats)))
     ranks = base.select("node", (F.lit(1.0) / F.col("__n")).alias("rank"))
     for i in range(iterations):
         contrib = norm.join(
@@ -87,8 +90,7 @@ def pagerank(
             ).alias("rank"),
         )
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < iterations:
-            # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = local_checkpoint(ranks)
     return ranks
 
 
@@ -131,8 +133,7 @@ def lpa_labels(
         edges.select(F.col(dst).alias("u"), F.col(src).alias("v"))
     )
     loops = base.select("u").distinct().select("u", F.col("u").alias("v"))
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    sym = base.unionAll(loops).localCheckpoint(eager=False)
+    sym = local_checkpoint(base.unionAll(loops))
     labels = sym.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -149,10 +150,9 @@ def lpa_labels(
             .select(F.col("u").alias("node"), "lbl")
         )
         if converge:
-            # lazy checkpoint: subtree must be deterministic (see
-            # operators/dedup.py DETERMINISM note); the count action
-            # below materializes it, truncating per-round lineage
-            new = new.localCheckpoint(eager=False)
+            # the count action below materializes it, truncating
+            # per-round lineage
+            new = local_checkpoint(new)
             changed = (
                 new.join(labels.withColumnRenamed("lbl", "__prev"), "node")
                 .filter(F.col("lbl") != F.col("__prev"))
@@ -218,11 +218,9 @@ def degree_oriented_triangles(edges: DataFrame) -> DataFrame:
     id-order where a low-id hub contributes a quadratic wedge bucket.
 
     Returns columns ``apex, v, w`` (one row per triangle)."""
-    # Lazy checkpoint is safe: orient_by_degree is deterministic (pure
-    # degree-count agg + (deg, id) comparison — see the DETERMINISM
-    # note in operators/dedup.py), and it stops the self-join below
-    # from recomputing the degree agg on both sides.
-    d = orient_by_degree(edges).localCheckpoint(eager=False)
+    # The checkpoint stops the self-join below from recomputing the
+    # degree agg on both sides.
+    d = local_checkpoint(orient_by_degree(edges))
     d1 = d.alias("d1")
     d2 = d.alias("d2")
     wedges = (

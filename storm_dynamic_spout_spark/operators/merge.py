@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+
 
 def merge_upsert(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFrame:
     """SCD-1 merge of ``source`` into ``target`` on ``keys``.
@@ -98,9 +100,8 @@ def merge_scd2(
     # lazy checkpoint: the full-outer join feeds THREE output branches
     # (keep / closed / opened); without it each branch re-evaluates the
     # whole current-slice x batch join — and everything upstream of it
-    # (the SCD-2 catalog query re-scanned documents 9x).  Deterministic
-    # subtree required (operators/dedup.py DETERMINISM note).
-    joined = cur.join(src, cond, "full_outer").localCheckpoint(eager=False)
+    # (the SCD-2 catalog query re-scanned documents 9x).
+    joined = local_checkpoint(cur.join(src, cond, "full_outer"))
     changed = F.lit(False)
     for c in data_cols:
         changed = changed | ~F.col(c).eqNullSafe(F.col(f"__s_{c}"))

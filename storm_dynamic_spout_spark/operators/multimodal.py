@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+
 #: internal exception types a codec parser can hit on malformed bytes
 #: (truncated headers, bad lengths, dangling table references); the
 #: boundary below converts every one of them into the DOCUMENTED
@@ -1217,8 +1219,7 @@ def phash_near_pairs(
     # hashed comes out of the Python decode stage and feeds BOTH join
     # sides — materialize it once so the decoders run once, not per
     # alias (the containment_pairs grams rationale)
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    keyed = hashed.localCheckpoint(eager=False).select(
+    keyed = local_checkpoint(hashed).select(
         F.col(id_col), hash_col, F.explode(bands).alias("__band")
     )
     a = keyed.select(

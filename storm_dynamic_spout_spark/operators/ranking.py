@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+
 #: Fixed MM iterations — geometric convergence makes 12 plenty for
 #: reporting-grade strengths (two-item 3:1 matchup lands within 3e-3
 #: of the closed-form MLE); both engines run the identical count, and
@@ -90,17 +92,14 @@ def mm_strength_iterations(
     # reference re-derives it from the comparison log — for the
     # catalog queries that is K+2 corpus window scans (the r12
     # self-join-recompute class; PLAN_INVENTORY showed 0 reused
-    # exchanges).  Deterministic integer aggregate, so the lazy
-    # checkpoint is safe (operators/dedup.py DETERMINISM note).
-    pairs = pairs.localCheckpoint(eager=False)
+    # exchanges).
+    pairs = local_checkpoint(pairs)
     wins = item_win_totals(pairs)
     n_ij = F.col("wins_a") + F.col("wins_b")
     # strengths live as integer micro-units: exact to compare, exact to
-    # broadcast, and the per-pair denominator reads two of them.  Lazy
-    # checkpoint is safe: the subtree is a deterministic integer
-    # aggregate (see the DETERMINISM note in operators/dedup.py), and
-    # it stops each iteration from recomputing the full history.
-    strengths = init.localCheckpoint(eager=False)
+    # broadcast, and the per-pair denominator reads two of them.  The
+    # checkpoint stops each iteration from recomputing the full history.
+    strengths = local_checkpoint(init)
     for _ in range(iterations):
         pa = strengths.select(
             F.col("item").alias("item_a"), F.col("__p_micro").alias("__pa")
@@ -143,7 +142,9 @@ def mm_strength_iterations(
         num = F.col("__wins") * F.lit(_MICRO)
         whole = F.expr(f"(__wins * {_MICRO}) div __denom_micro")
         rem = F.pmod(num, F.col("__denom_micro"))
-        strengths = (
+        # checkpointed each iteration: truncates the per-iteration
+        # lineage growth
+        strengths = local_checkpoint(
             wins.join(per_item, "item")
             .select(
                 "item",
@@ -158,10 +159,6 @@ def mm_strength_iterations(
                     F.lit(1),
                 ).alias("__p_micro"),
             )
-            # lazy checkpoint: deterministic (exact integer micro-unit
-            # update over the checkpointed previous state) — truncates
-            # the per-iteration lineage growth
-            .localCheckpoint(eager=False)
         )
     return strengths
 
@@ -220,10 +217,8 @@ def bradley_terry_strengths(
     # one lineage truncation shared by the init, every MM iteration
     # (mm_strength_iterations re-marks it — a no-op-sized copy of the
     # vocab-sized table), and the final report join, so the comparison
-    # log is aggregated exactly once per fit; deterministic integer
-    # aggregate, so the lazy checkpoint is safe (operators/dedup.py
-    # DETERMINISM note)
-    pairs = pairs.localCheckpoint(eager=False)
+    # log is aggregated exactly once per fit
+    pairs = local_checkpoint(pairs)
     init = item_win_totals(pairs).select(
         "item", F.lit(_MICRO).cast("long").alias("__p_micro")
     )
@@ -265,15 +260,10 @@ def cohen_kappa(
     b = df.filter(F.col(rater_col) == rater_b).select(
         F.col(item_col).alias("__item"), F.col(label_col).alias("__lb")
     )
-    # lazy checkpoint: subtree must be deterministic (see
-    # operators/dedup.py DETERMINISM note) — exact integer counts of a
-    # pure equi-join
-    cell = (
+    cell = local_checkpoint(
         a.join(b, "__item")
         .groupBy("__la", "__lb")
         .agg(F.count(F.lit(1)).cast("long").alias("__c"))
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
-        .localCheckpoint(eager=False)
     )
     counts = cell.agg(
         # coalesce keeps the empty-log case identical to the former

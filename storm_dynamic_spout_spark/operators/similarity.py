@@ -14,6 +14,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+
 
 def as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -668,8 +670,7 @@ def pq_topk_adc(
     # only subtree the r8 re-index made two stages deep — scan ->
     # single-partition row_number — so computing it twice doubles
     # that latency for zero information)
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    cent = _dense_codebook(v, id_col, kc).localCheckpoint(eager=False)
+    cent = local_checkpoint(_dense_codebook(v, id_col, kc))
     codes = pq_assign(df, id_col, vec_col, dim, m, kc, codebook=cent)
     q = v.filter(query_pred).select(
         F.col(id_col).alias("query_id"), F.col("__v").alias("__q")
@@ -738,10 +739,11 @@ def pq_topk_ivf_adc(
     v = df.select(
         F.col(id_col), as_double(F.col(vec_col)).alias("__v"), F.col(bucket_col)
     )
-    cent = _dense_codebook(
-        v.select(F.col(id_col), F.col("__v")), id_col, kc
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    ).localCheckpoint(eager=False)
+    cent = local_checkpoint(
+        _dense_codebook(
+            v.select(F.col(id_col), F.col("__v")), id_col, kc
+        )
+    )
     codes = pq_assign(
         df.withColumn("__bkt", F.col(bucket_col)),
         id_col,
@@ -821,7 +823,7 @@ def pq_train_codebook(
     vector fans out to its m subvectors map-side, the m*k centroid
     table BROADCASTS, the argmin collapses map-side (min_by partial
     agg), and the centroid update is a (subspace, cid, pos) mean —
-    m*k*sub group cells.  Iterations localCheckpoint the m*k-row
+    m*k*sub group cells.  Iterations checkpoint the m*k-row
     centroid table only (the dedup/PageRank loop convention), never
     the corpus."""
     sub = dim // m
@@ -897,7 +899,7 @@ def pq_train_codebook(
                 F.transform("__pc", lambda s: s.getField("__c")).alias("__new"),
             )
         )
-        cent = (
+        cent = local_checkpoint(
             cent.join(means, ["__ms", "__cid"], "left")
             .select(
                 "__ms",
@@ -905,10 +907,6 @@ def pq_train_codebook(
                 # empty cluster keeps its previous centroid
                 F.coalesce("__new", "__cv").alias("__cv"),
             )
-            # lazy checkpoint: subtree must be deterministic (see
-            # operators/dedup.py DETERMINISM note) — integer-rounded
-            # argmin with id tiebreak over a static corpus is.
-            .localCheckpoint(eager=False)
         )
 
     return (
@@ -975,8 +973,7 @@ def pq_topk_ivf_adc_tuned(
         if train_iters > 0
         else _dense_codebook(v.select(F.col(id_col), F.col("__v")), id_col, kc)
     )
-    # lazy checkpoint: subtree must be deterministic (see operators/dedup.py DETERMINISM note)
-    cent = raw_cent.localCheckpoint(eager=False)
+    cent = local_checkpoint(raw_cent)
     codes = pq_assign(
         df.withColumn("__bkt", F.col(bucket_col)),
         id_col,

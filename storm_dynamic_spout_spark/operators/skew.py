@@ -103,6 +103,11 @@ def fan_out_narrow(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     before round-robin assignment (``sortBeforeRepartition``, on by
     default — guide §2.5), so recomputation reproduces the same
     row-to-partition mapping; safe below lazy checkpoints.
+
+    Precondition: ``df`` is a scan-only plan (scan, filter, project).
+    The partition count is read from ``df.rdd`` at construction time,
+    and on a plan with a shuffle AQE runs the upstream stages to
+    answer it — a full job before the query is even returned.
     """
     if df.isStreaming:
         # a streaming frame has no static partitioning to inspect (and
@@ -114,52 +119,3 @@ def fan_out_narrow(df: DataFrame, min_parts: int | None = None) -> DataFrame:
         return df
     return df.repartition(target)
 
-
-#: Deployment dial for shared-subtree materialization (see
-#: :func:`shared_subtree`).  The bench/oracle path MUST stay on the
-#: default ``local``.
-SHARED_MODE_ENV = "SPARK_GRAFT_SHARED_MODE"
-
-
-def shared_subtree(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Materialize a DETERMINISTIC shared subtree once for its N
-    consumers (Catalyst re-evaluates a subtree per differently-aliased
-    consumer).  The mechanism is a deployment dial
-    (``$SPARK_GRAFT_SHARED_MODE``), r15 verdict item 4 / advice item 2:
-
-    - ``local`` (default): ``localCheckpoint`` — blocks live on
-      executors and belong to THIS DataFrame instance, so every fresh
-      query construction (each bench rep, each oracle run)
-      re-materializes from parquet: nothing persists across runs.
-      Trade-off: lineage is truncated, so losing an executor
-      mid-query kills the job — invisible on local[n], routine at
-      cluster scale.
-    - ``persist``: ``MEMORY_AND_DISK`` — keeps lineage (executor loss
-      recomputes, the 100 TB fault-tolerance choice; measured
-      3-10% FASTER at sf0.1 too: bpe_apply 1.79->1.57s,
-      minhash_pairs 4.54->4.13s, token_budget 0.69->0.66s best).
-      NOT the bench default because the session CacheManager matches
-      by canonical plan: an identical later construction would
-      silently reuse the cache (cross-run result caching, which the
-      bench contract forbids) and nothing in the query contract ever
-      unpersists.  For cluster deployments that own their cache
-      hygiene.
-    - ``reliable``: ``checkpoint()`` to the configured checkpoint dir
-      — survives executor loss without recompute; the slowest
-      (an extra write+read of the subtree per materialization).
-    """
-    import os
-
-    mode = os.environ.get(SHARED_MODE_ENV, "local")
-    if mode == "persist":
-        from pyspark.storagelevel import StorageLevel
-
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
-        if eager:
-            out.count()
-        return out
-    if mode == "reliable":
-        return df.checkpoint(eager=eager)
-    # deterministic-subtree precondition documented at every call site
-    # (operators/dedup.py DETERMINISM note)
-    return df.localCheckpoint(eager=eager)

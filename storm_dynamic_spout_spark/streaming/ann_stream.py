@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 from storm_dynamic_spout_spark.operators.similarity import (
     as_double,
     dot,
@@ -181,7 +182,7 @@ class StreamingAnnIndex:
         # anti-join over the static pre-batch index files); the batch-
         # key aggregate below materializes it BEFORE any append runs —
         # one driver job instead of three (r15 verdict item 6)
-        new = new.localCheckpoint(eager=False)
+        new = local_checkpoint(new)
         # deterministic batch identity over the DISTINCT new ids (one
         # row per id here, distinct by construction — the bm25_stream
         # convention): a crash between the match append and the index

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.operators.bloom import _mask_col, _word_col
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 
 #: Stream-scale default geometry: 2^20 bits (128 KiB, ≤16384 words),
 #: 3 bits per key — <1% false positives up to ~100k keys.
@@ -131,7 +132,7 @@ class StreamingBloomFilter:
         rows are the only ones that need the exact check.  Then append
         the batch's own contribution to the bitmap.
 
-        The classification materializes (localCheckpoint) BEFORE the
+        The classification materializes (eager local_checkpoint) BEFORE the
         append so a key duplicated WITHIN the batch still classifies
         against the pre-batch state — intra-batch dups are the exact
         checker's job, same contract as the dedup index."""
@@ -151,7 +152,7 @@ class StreamingBloomFilter:
                 .withColumn("possibly_seen", F.coalesce(hit, F.lit(False)))
                 .drop("__bm")
             )
-        out = out.localCheckpoint(eager=True)
+        out = local_checkpoint(out, eager=True)
         (
             out.groupBy("__word")
             .agg(F.bit_or("__mask").alias("__mask"))

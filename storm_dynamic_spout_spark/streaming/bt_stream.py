@@ -55,6 +55,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 from storm_dynamic_spout_spark.operators.ranking import (
     _MICRO,
     mm_strength_iterations,
@@ -157,10 +158,9 @@ class StreamingBradleyTerry:
             return None
         # the report references the pair table several times (win and
         # comparison totals + the normalization join): truncate its
-        # lineage once so the delta files are read and summed once —
-        # deterministic subtree (operators/dedup.py DETERMINISM note)
+        # lineage once so the delta files are read and summed once
         return normalized_strength_report(
-            pairs.localCheckpoint(eager=False),
+            local_checkpoint(pairs),
             cur.select("item", "__p_micro"),
         )
 
@@ -188,9 +188,8 @@ class StreamingBradleyTerry:
         # lineage-truncate once: the cumulative table feeds the item
         # list (2 refs), every MM iteration, and the publish — all
         # pair-vocabulary-sized, but each ref would re-read and re-sum
-        # the delta files otherwise.  Deterministic (file read + exact
-        # integer sums — operators/dedup.py DETERMINISM note)
-        cum = self.cumulative_pairs(spark).localCheckpoint(eager=False)
+        # the delta files otherwise.
+        cum = local_checkpoint(self.cumulative_pairs(spark))
         init = (
             cum.select(F.col("item_a").alias("item"))
             .unionByName(cum.select(F.col("item_b").alias("item")))

@@ -21,8 +21,10 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
 from storm_dynamic_spout_spark.streaming import FileTopic
 from storm_dynamic_spout_spark.streaming.file_topic import TOPIC_SCHEMA
 from storm_dynamic_spout_spark.streaming.filter_chain import FilterChain
@@ -254,28 +256,31 @@ def test_trigger_poll_survives_bad_event_and_does_not_loop(spark, tmp_path):
 # -- 7. r8 advice: lazy-checkpoint determinism precondition ------------------
 
 
-def test_every_lazy_checkpoint_site_documents_determinism():
-    """The r8 advice: localCheckpoint(eager=False) relies on the
-    subtree being DETERMINISTIC (compute-on-first-action; a sampling /
-    wall-clock / stateful-UDF subtree could diverge across concurrent
-    consumers).  The canonical explanation lives in operators/dedup.py;
-    every OTHER site must carry the one-line pointer within the five
-    lines above it, so a future lazy checkpoint can't ship without the
-    precondition being considered."""
+def test_lazy_checkpoint_rejects_nondeterministic_plan(spark):
+    """A lazy checkpoint computes on first action, so concurrent
+    consumers of a nondeterministic subtree could observe divergent
+    data; the helper refuses it and accepts the eager form."""
+    df = spark.range(10).withColumn("r", F.rand(7))
+    with pytest.raises(ValueError, match="nondeterministic"):
+        local_checkpoint(df)
+    assert local_checkpoint(df, eager=True).count() == 10
+
+
+def test_local_checkpoint_helper_is_the_only_materialization_site():
+    """Every checkpoint in the package goes through the determinism
+    check: no ``.localCheckpoint(...)`` call outside the helper."""
+    import ast
     import pathlib
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "storm_dynamic_spout_spark"
-    missing = []
-    for py in sorted(pkg.rglob("*.py")):
-        lines = py.read_text().splitlines()
-        has_canonical = "DETERMINISM note" in py.read_text() and py.name == "dedup.py"
-        for i, line in enumerate(lines):
-            if "localCheckpoint(eager=False)" not in line:
-                continue
-            ctx = "\n".join(lines[max(0, i - 5) : i + 1])
-            if has_canonical or "deterministic" in ctx.lower():
-                continue
-            missing.append(f"{py.relative_to(pkg)}:{i + 1}")
-    assert not missing, (
-        "lazy checkpoint sites without the determinism note: " + ", ".join(missing)
-    )
+    helper = pkg / "operators" / "checkpoint.py"
+    raw = [
+        f"{py.relative_to(pkg)}:{node.lineno}"
+        for py in sorted(pkg.rglob("*.py"))
+        if py != helper
+        for node in ast.walk(ast.parse(py.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ]
+    assert not raw, "raw localCheckpoint calls: " + ", ".join(raw)
