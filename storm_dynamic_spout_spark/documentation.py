@@ -30,19 +30,22 @@ def _fmt_default(v) -> str:
 
 
 def config_table() -> str:
-    """Markdown table of every engine config key, its default, and doc."""
-    from storm_dynamic_spout_spark.engine import CONFIG_DOCS, DEFAULTS
+    """Markdown table of every engine config key, its default, and doc.
+    Environment-derived defaults render as their no-environment values,
+    so the table does not depend on the host that regenerates it."""
+    from storm_dynamic_spout_spark.engine import CONFIG_DOCS, DEFAULTS, spark_env_defaults
 
     missing = set(DEFAULTS) ^ set(CONFIG_DOCS)
     if missing:
         raise ValueError(f"DEFAULTS and CONFIG_DOCS disagree on keys: {sorted(missing)}")
+    defaults = {**DEFAULTS, **spark_env_defaults({})}
     lines = [
         "| Key | Default | Description |",
         "|---|---|---|",
     ]
-    for key in DEFAULTS:
+    for key, value in defaults.items():
         doc = CONFIG_DOCS[key].replace("|", "\\|")
-        lines.append(f"| `{key}` | {_fmt_default(DEFAULTS[key])} | {doc} |")
+        lines.append(f"| `{key}` | {_fmt_default(value)} | {doc} |")
     return "\n".join(lines)
 
 

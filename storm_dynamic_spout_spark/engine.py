@@ -14,13 +14,28 @@ from __future__ import annotations
 
 import os
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
 # ---------------------------------------------------------------------------
 # Config
 # ---------------------------------------------------------------------------
+
+def spark_env_defaults(environ: Mapping[str, str]) -> dict[str, Any]:
+    """The Spark defaults the environment may override: master and
+    shuffle partitions (``SPARK_GRAFT_MASTER`` / ``SPARK_GRAFT_CPUS``)
+    and the driver heap (``SPARK_GRAFT_DRIVER_MEM``).  An empty
+    ``environ`` gives the documented values."""
+    cpus = environ.get("SPARK_GRAFT_CPUS", "32")
+    return {
+        "spark.master": environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]"),
+        "spark.shuffle_partitions": int(cpus),
+        "spark.driver_memory": environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    }
+
+
+_ENV_DEFAULTS = spark_env_defaults(os.environ)
 
 #: Defaults mirroring the reference's SpoutConfig.setDefaults
 #: (config/SpoutConfig.java:444-507) re-interpreted for Spark execution,
@@ -56,14 +71,11 @@ DEFAULTS: dict[str, Any] = {
     "metrics.jsonl_path": None,  # required when metrics.recorder=jsonl
     "metrics.prom_path": None,  # required when metrics.recorder=prometheus
     # --- Spark execution defaults ----------------------------------------
-    "spark.master": os.environ.get(
-        "SPARK_GRAFT_MASTER",
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-    ),
+    "spark.master": _ENV_DEFAULTS["spark.master"],
     "spark.app_name": "storm_dynamic_spout_spark",
-    "spark.shuffle_partitions": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+    "spark.shuffle_partitions": _ENV_DEFAULTS["spark.shuffle_partitions"],
     "spark.session_timezone": "UTC",
-    "spark.driver_memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver_memory": _ENV_DEFAULTS["spark.driver_memory"],
 }
 
 #: One-line documentation per config key — the annotation-driven config

@@ -54,6 +54,15 @@ _OUT_SCHEMA = _st.StructType(
 )
 
 
+def _has_parquet(root: str) -> bool:
+    """True once any ``*.parquet`` file exists under ``root`` (stops at
+    the first one found)."""
+    for _dir, _subdirs, files in os.walk(root):
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
+
+
 class RouteHighWater:
     """In-memory per-route delivered high-water marks and row counts.
 
@@ -121,30 +130,35 @@ def observe_delivery(df: DataFrame, num_partitions: int, name: str):
     """Attach a delivery-metrics Observation to a batch DataFrame: row
     count + per-partition max offset, computed map-side inside whatever
     action materializes ``df`` (the sink write) — no second read of the
-    batch.  Per-partition maxima are expressed as ``max(when(partition
-    = p, offset))`` aggregate columns, which partial-aggregate before
-    the driver sees them; partition counts are topic metadata (small),
-    never data-sized."""
+    batch.
+
+    The observation has two columns: ``n`` (``count(1)``) and ``hw``,
+    an array whose element ``p`` is ``max(CASE WHEN partition = p THEN
+    offset END)`` (NULL for a partition with no row in the batch).  Both
+    are one SQL expression each, so building the observation is a fixed
+    two-Column cost per batch instead of one py4j call chain per
+    partition; the maxima still partial-aggregate before the driver sees
+    them, and partition counts are topic metadata (small), never
+    data-sized."""
     from pyspark.sql import Observation
 
+    maxima = ", ".join(
+        f"max(CASE WHEN `partition` = {p} THEN `offset` END)"
+        for p in range(num_partitions)
+    )
     obs = Observation(name)
-    aggs = [F.count(F.lit(1)).alias("n")]
-    for p in range(num_partitions):
-        aggs.append(
-            F.max(F.when(F.col("partition") == p, F.col("offset"))).alias(f"p{p}")
-        )
-    return df.observe(obs, *aggs), obs
+    observed = df.observe(
+        obs, F.count(F.lit(1)).alias("n"), F.expr(f"array({maxima}) AS hw")
+    )
+    return observed, obs
 
 
 def delivery_from_observation(obs, num_partitions: int) -> tuple[dict[int, int], int]:
     """Decode (per-partition maxima, row count) once the observed job
     finished (``Observation.get`` blocks on the action)."""
     row = obs.get
-    per_part = {
-        p: int(row[f"p{p}"])
-        for p in range(num_partitions)
-        if row[f"p{p}"] is not None
-    }
+    hw = row["hw"]
+    per_part = {p: int(hw[p]) for p in range(num_partitions) if hw[p] is not None}
     return per_part, int(row["n"] or 0)
 
 
@@ -302,7 +316,13 @@ class DynamicStreamApp:
                             inner.recorder.count("rollup.batches")
 
                 if retry_runner is not None:
-                    retry_runner.process_batch(kept, int(_time.time() * 1000), _sink)
+                    split = retry_runner.process_batch(
+                        kept, int(_time.time() * 1000), _sink
+                    )
+                    inner.recorder.count("retry.failed", split.failed)
+                    inner.recorder.count("retry.exhausted", split.exhausted)
+                    if not split.dlq_written:
+                        inner.recorder.count("retry.dlq_skipped")
                 else:
                     _sink(kept)
                 inner.recorder.count("firehose.batches")
@@ -588,6 +608,11 @@ class DynamicStreamApp:
         call on a freshly-restarted instance).  Everything after reads
         memory."""
         if self._hwm.warm:
+            return
+        if not _has_parquet(self.out_dir):
+            # nothing delivered yet: planning the scan alone costs more
+            # than a whole small batch, and it would find no rows
+            self._hwm.warm_load([])
             return
         delivered = (
             self._full_output()

@@ -281,6 +281,9 @@ METRIC_CATALOG: list[tuple[str, str, str]] = [
     ("consumer_state.flushes", "counter", "Consumer-state flushes through the O6 adapter (monitor thread)"),
     ("monitor.errors", "counter", "Monitor-thread iterations that raised (app kept running)"),
     ("rollup.batches", "counter", "Micro-batches merged into the continuous rollup (skipped replays excluded)"),
+    ("retry.failed", "counter", "Firehose rows that failed the retry condition (new and due retries)"),
+    ("retry.exhausted", "counter", "Failed firehose rows past the retry limit, routed to the DLQ"),
+    ("retry.dlq_skipped", "counter", "Firehose batches whose DLQ append was skipped (no row could exhaust)"),
 ]
 
 

@@ -26,9 +26,10 @@ Policy semantics are kept bit-for-bit with the reference:
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 ATTEMPTS_COL = "retry_attempts"
@@ -152,6 +153,17 @@ def split_exhausted(retries: DataFrame, policy: RetryPolicy) -> tuple[DataFrame,
     return retries.filter(further), retries.filter(~further)
 
 
+@dataclass(frozen=True)
+class RetrySplit:
+    """One :meth:`RetryTableRunner.process_batch` call: the failed and
+    exhausted row counts, observed on the runner's own state writes, and
+    whether the DLQ append ran."""
+
+    failed: int  # candidate rows that failed this batch
+    exhausted: int  # failed rows past the retry limit (to the DLQ)
+    dlq_written: bool
+
+
 class RetryTableRunner:
     """The per-micro-batch retry loop, wired (SURVEY §3.2 fail path):
 
@@ -191,25 +203,52 @@ class RetryTableRunner:
         recover_interrupted_swap(self.retries_dir)
         self.dlq_partition_by_date = dlq_partition_by_date
         os.makedirs(dlq_dir, exist_ok=True)
+        # earliest next-attempt time of a retry-table row whose next
+        # failure exhausts it (inf: no such row), observed on this
+        # runner's own swap writes; None while unknown (a table left by
+        # an earlier runner, or a swap that did not finish)
+        self._exhaust_due_ms: float | None = (
+            None if self._has_retries() else math.inf
+        )
 
-    def _load_retries(self, spark, like: DataFrame) -> DataFrame | None:
+    def _has_retries(self) -> bool:
         import os
 
-        if not os.path.isdir(self.retries_dir) or not any(
+        return os.path.isdir(self.retries_dir) and any(
             f.endswith(".parquet") for f in os.listdir(self.retries_dir)
-        ):
+        )
+
+    def _load_retries(self, spark, like: DataFrame) -> DataFrame | None:
+        if not self._has_retries():
             return None
         return spark.read.schema(_with_retry_cols(like.schema)).parquet(
             self.retries_dir
         )
 
-    def process_batch(self, batch_df: DataFrame, now_ms: int, sink) -> None:
+    def process_batch(self, batch_df: DataFrame, now_ms: int, sink) -> RetrySplit:
         """Split the batch (+ due retries, ahead of new input) into
         ok/failed, call ``sink(ok_df)``, persist retry/DLQ state.
 
+        The DLQ append is skipped when no row can be exhausted this batch:
+        a first failure still retries, and no retry-table row whose next
+        failure exhausts it is due yet.  The runner knows the latter from
+        an ``Observation`` on its own retry-table write (the earliest
+        ``next_attempt_ts_ms`` of such a row), so the skip depends on no
+        count from the sink and on no job of its own.  Until this runner
+        has written the table once (a table left by an earlier run) the
+        DLQ append runs every batch, as before.
+
         ``sink`` runs BEFORE the retry-table swap: the ok rows' lineage
         reads the pre-swap retry files, so they must materialize first
-        (the swap deletes what the lazy plan would re-read)."""
+        (the swap deletes what the lazy plan would re-read).  The failure
+        predicate must be deterministic: the sink's job and the DLQ and
+        retry writes each evaluate it over their own read of the
+        candidates, and a row must land on the same side in every job.
+
+        Returns the :class:`RetrySplit`: the failed and exhausted counts,
+        observed on the DLQ append or the retry-table write (whichever
+        runs first; both read every failed row), and whether the DLQ
+        append ran."""
         spark = batch_df.sparkSession
         # Coalesce to false: a failure predicate evaluating to NULL (nullable
         # key/value columns) must classify the row as ok, not let it vanish
@@ -231,8 +270,22 @@ class RetryTableRunner:
         sink(ok)
         failed = candidates.filter(fail)
         scheduled = schedule_failures(failed.drop(NEXT_TS_COL), self.policy, now_ms)
+        split = Observation()
+        scheduled = scheduled.observe(
+            split,
+            F.count(F.lit(1)).alias("failed"),
+            F.count(
+                F.when(~self.policy.retry_further_col(F.col(ATTEMPTS_COL)), 1)
+            ).alias("exhausted"),
+        )
         retryable, exhausted = split_exhausted(scheduled, self.policy)
-        if self.dlq_partition_by_date:
+        exhaust_due_ms = self._exhaust_due_ms
+        write_dlq = (
+            exhaust_due_ms is None
+            or now_ms >= exhaust_due_ms
+            or not self.policy.retry_further(1)
+        )
+        if write_dlq and self.dlq_partition_by_date:
             from storm_dynamic_spout_spark.operators.layout import write_clustered
 
             write_clustered(
@@ -241,16 +294,26 @@ class RetryTableRunner:
                 partition_by=["event_date"],
                 mode="append",
             )
-        else:
+        elif write_dlq:
             exhausted.write.mode("append").parquet(self.dlq_dir)
 
         from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
 
+        state = Observation()
         keep = retryable if pending is None else pending.unionByName(retryable)
+        exhausts_next = ~self.policy.retry_further_col(F.col(ATTEMPTS_COL) + 1)
+        keep = keep.observe(
+            state, F.min(F.when(exhausts_next, F.col(NEXT_TS_COL))).alias("due_ms")
+        )
+        self._exhaust_due_ms = None
         swap_publish(
             self.retries_dir,
             lambda tmp: keep.write.mode("overwrite").parquet(tmp),
         )
+        due_ms = state.get["due_ms"]
+        self._exhaust_due_ms = math.inf if due_ms is None else due_ms
+        counts = split.get
+        return RetrySplit(counts["failed"], counts["exhausted"], write_dlq)
 
     def dlq(self, spark, like: DataFrame) -> DataFrame:
         import os

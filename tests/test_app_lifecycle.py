@@ -137,6 +137,10 @@ def test_retry_to_dlq_in_live_loop(spark, tmp_path):
     app.process_all_available()
     # batch 1: o1 emitted; p1 failed once (attempts=1, retryable, due now)
     assert _vals(app.output(), "firehose") == ["o1"]
+    # no row could exhaust on a first failure: the DLQ append was skipped
+    counters = app.recorder.counters
+    assert (counters["retry.failed"], counters["retry.exhausted"]) == (1, 0)
+    assert counters["retry.dlq_skipped"] == 1
     # batch 2 (new input triggers it): p1 retried, fails again → attempts=2
     # → exceeds retry_limit=2 → DLQ
     app.produce([("ok", "o2")])
@@ -145,6 +149,8 @@ def test_retry_to_dlq_in_live_loop(spark, tmp_path):
     dlq = app.retry_runner.dlq(spark, app.topic.read(spark))
     rows = [(r["value"], r[ATTEMPTS_COL]) for r in dlq.collect()]
     assert rows == [("p1", 2)]
+    assert (counters["retry.failed"], counters["retry.exhausted"]) == (2, 1)
+    assert counters["retry.dlq_skipped"] == 1
     # retry table is drained
     leftover = app.retry_runner._load_retries(spark, app.topic.read(spark))
     assert leftover is None or leftover.count() == 0
