@@ -26,7 +26,7 @@ Engine mapping:
   match append is key-guarded — the log is partitioned by
   ``__batch_key``, so the landed-check is a directory-name lookup and
   re-delivery completes exactly the missing index append without
-  duplicating match rows (the bm25_stream guard pattern).  Surviving
+  duplicating match rows (streaming/dirswap.py append_once).  Surviving
   NEW vectors bucket-join against the PRE-BATCH index, score exact
   cosine, keep top-k per query (rank by rounded cosine desc, then
   neighbor id — integer-stable across engines), append matches to the
@@ -58,6 +58,7 @@ from storm_dynamic_spout_spark.operators.similarity import (
     norm,
     srp_planes,
 )
+from storm_dynamic_spout_spark.streaming import dirswap
 
 #: Coarse-bucket geometry: 4 sign bits → 16 buckets over the 64-dim
 #: fixture embeddings.  Widen n_planes as the corpus grows.
@@ -101,30 +102,17 @@ class StreamingAnnIndex:
         os.makedirs(self.match_dir, exist_ok=True)
         # heal a crash inside a previous compact_index swap — without
         # this, the makedirs above would present a silently-empty index
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.index_dir)
+        dirswap.recover_interrupted_swap(self.index_dir)
 
     # -- state ---------------------------------------------------------------
 
-    def _has_files(self, d: str) -> bool:
-        # the match log is partitioned by __batch_key (subdirs), the
-        # index dir is flat — walk covers both
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for f in files
-        )
-
     def index_df(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.index_dir):
+        if not dirswap.has_parquet(self.index_dir):
             return None
         return spark.read.parquet(self.index_dir)
 
     def matches(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.match_dir):
+        if not dirswap.has_parquet(self.match_dir):
             return None
         return spark.read.parquet(self.match_dir)
 
@@ -139,13 +127,11 @@ class StreamingAnnIndex:
         Crash-safe via streaming/dirswap.py: the constructor heals any
         interrupted swap, so a crash mid-compaction can never surface
         as an empty index on restart."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         idx = self.index_df(spark)
         if idx is None:
             return 0
         merged = idx.dropDuplicates(["__id"]).repartition(target_files)
-        swap_publish(
+        dirswap.swap_publish(
             self.index_dir,
             lambda tmp: merged.write.mode("overwrite").parquet(tmp),
         )
@@ -183,24 +169,13 @@ class StreamingAnnIndex:
         # key aggregate below materializes it BEFORE any append runs —
         # one driver job instead of three (r15 verdict item 6)
         new = local_checkpoint(new)
-        # deterministic batch identity over the DISTINCT new ids (one
-        # row per id here, distinct by construction — the bm25_stream
-        # convention): a crash between the match append and the index
-        # append re-delivers under the same key, and the partition-dir
-        # guard below skips the already-landed match append instead of
-        # duplicating it
-        key = (
-            new.select("__id")
-            .distinct()
-            .agg(F.expr("bit_xor(xxhash64(__id))"))
-            .first()[0]
-        )
+        # deterministic batch identity over the new ids: a crash between
+        # the match append and the index append re-delivers under the
+        # same key, and append_once skips the already-landed match
+        # append instead of duplicating it
+        key = dirswap.batch_key(new, "__id")
         if key is None:
             return  # fully-committed re-delivery (or an empty batch)
-        if seen is not None and os.path.isdir(
-            os.path.join(self.match_dir, f"__batch_key={key}")
-        ):
-            seen = None  # match rows for this batch already landed
         if seen is not None:
             q = new.select(
                 F.col("__id").alias("query_id"),
@@ -224,10 +199,5 @@ class StreamingAnnIndex:
                     "rank",
                 )
             )
-            (
-                matches.withColumn("__batch_key", F.lit(int(key)).cast("long"))
-                .write.partitionBy("__batch_key")
-                .mode("append")
-                .parquet(self.match_dir)
-            )
+            dirswap.append_once(matches, self.match_dir, key)
         new.write.mode("append").parquet(self.index_dir)

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as _st
 
+from storm_dynamic_spout_spark.streaming import dirswap
 from storm_dynamic_spout_spark.streaming.file_topic import TOPIC_SCHEMA, FileTopic
 from storm_dynamic_spout_spark.streaming.filter_chain import FilterChain
 from storm_dynamic_spout_spark.streaming.firehose import Firehose, write_sink_batch
@@ -52,15 +53,6 @@ _OUT_SCHEMA = _st.StructType(
         _st.StructField("event_date", _st.DateType()),
     ]
 )
-
-
-def _has_parquet(root: str) -> bool:
-    """True once any ``*.parquet`` file exists under ``root`` (stops at
-    the first one found)."""
-    for _dir, _subdirs, files in os.walk(root):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
 
 
 class RouteHighWater:
@@ -223,11 +215,7 @@ class DynamicStreamApp:
         self._monitor_stop = None
         os.makedirs(self.out_dir, exist_ok=True)
         # heal a crash inside a previous optimize_output swap
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.out_dir)
+        dirswap.recover_interrupted_swap(self.out_dir)
         # fail → retry-with-backoff → DLQ (T4-T7/S7): rows matching the
         # failure condition are treated as processing failures. Policy
         # defaults come from the config system (SpoutConfig.setDefaults
@@ -609,7 +597,7 @@ class DynamicStreamApp:
         memory."""
         if self._hwm.warm:
             return
-        if not _has_parquet(self.out_dir):
+        if not dirswap.has_parquet(self.out_dir):
             # nothing delivered yet: planning the scan alone costs more
             # than a whole small batch, and it would find no rows
             self._hwm.warm_load([])
@@ -705,10 +693,8 @@ class DynamicStreamApp:
 
         if self._firehose is not None or self._replay_queries:
             raise RuntimeError("optimize_output requires a closed app")
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         df = self.spark.read.schema(_OUT_SCHEMA).parquet(self.out_dir)
-        swap_publish(
+        dirswap.swap_publish(
             self.out_dir,
             lambda tmp: write_clustered(
                 df,

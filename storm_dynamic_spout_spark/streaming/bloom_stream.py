@@ -49,6 +49,7 @@ from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.operators.bloom import _mask_col, _word_col
 from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+from storm_dynamic_spout_spark.streaming import dirswap
 
 #: Stream-scale default geometry: 2^20 bits (128 KiB, ≤16384 words),
 #: 3 bits per key — <1% false positives up to ~100k keys.
@@ -71,20 +72,13 @@ class StreamingBloomFilter:
         self.m_bits = m_bits
         self.k_hashes = k_hashes
         os.makedirs(self.bitmap_dir, exist_ok=True)
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.bitmap_dir)
+        dirswap.recover_interrupted_swap(self.bitmap_dir)
 
     # -- state ---------------------------------------------------------------
 
-    def _has_files(self) -> bool:
-        return any(f.endswith(".parquet") for f in os.listdir(self.bitmap_dir))
-
     def bitmap_df(self, spark: SparkSession) -> DataFrame | None:
         """Current bitmap, duplicate words OR-ed (append-log form)."""
-        if not self._has_files():
+        if not dirswap.has_parquet(self.bitmap_dir):
             return None
         return (
             spark.read.parquet(self.bitmap_dir)
@@ -104,13 +98,11 @@ class StreamingBloomFilter:
     def compact_bitmap(self, spark: SparkSession) -> int:
         """Collapse the append log back to ≤ m/64 rows (crash-safe
         dirswap publish).  Returns the word count after compaction."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         bm = self.bitmap_df(spark)
         if bm is None:
             return 0
         merged = bm.coalesce(1)
-        swap_publish(
+        dirswap.swap_publish(
             self.bitmap_dir,
             lambda tmp: merged.write.mode("overwrite").parquet(tmp),
         )

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from storm_dynamic_spout_spark.operators.checkpoint import local_checkpoint
+from storm_dynamic_spout_spark.streaming import dirswap
 
 #: Okapi BM25 constants — same values as the batch scorer
 #: (catalog/llm.py BM25_K1/BM25_B) so the two legs rank consistently.
@@ -227,31 +228,18 @@ class StreamingBm25Index:
             os.makedirs(d, exist_ok=True)
         # heal a crash inside a previous compact_index swap — without
         # this, the makedirs above would present a silently-empty index
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
         for d in (self.postings_dir, self.stats_dir, self.df_dir):
-            recover_interrupted_swap(d)
+            dirswap.recover_interrupted_swap(d)
 
     # -- state ---------------------------------------------------------------
 
-    def _has_files(self, d: str) -> bool:
-        # the match log is partitioned by __batch_key (subdirs), the
-        # other state dirs are flat — walk covers both
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for f in files
-        )
-
     def postings_df(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.postings_dir):
+        if not dirswap.has_parquet(self.postings_dir):
             return None
         return spark.read.parquet(self.postings_dir)
 
     def matches(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.match_dir):
+        if not dirswap.has_parquet(self.match_dir):
             return None
         return spark.read.parquet(self.match_dir)
 
@@ -280,9 +268,9 @@ class StreamingBm25Index:
         BOTH sidecars from the postings ground truth before the first
         probe reads them.  Two directory walks when healthy — no Spark
         job."""
-        if not self._has_files(self.postings_dir):
+        if not dirswap.has_parquet(self.postings_dir):
             return
-        if self._has_files(self.stats_dir) and self._has_files(self.df_dir):
+        if all(dirswap.has_parquet(d) for d in (self.stats_dir, self.df_dir)):
             return
         self._rebuild_sidecars_from_postings(spark)
 
@@ -293,8 +281,6 @@ class StreamingBm25Index:
         materialized driver-side FIRST, so both writes are built from
         literals and never re-read a directory the swap just retired.
         Shared by compact_index and the empty-sidecar heal path."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         pos = self.postings_df(spark)
         if pos is None:
             return
@@ -313,7 +299,7 @@ class StreamingBm25Index:
             F.lit(int(row["__n_docs"])).cast("long").alias("__n_docs"),
             F.lit(int(row["__sum_dl"])).cast("long").alias("__sum_dl"),
         )
-        swap_publish(
+        dirswap.swap_publish(
             self.stats_dir,
             lambda tmp: stats.write.mode("overwrite").parquet(tmp),
         )
@@ -332,7 +318,7 @@ class StreamingBm25Index:
             )
             .coalesce(1)
         )
-        swap_publish(
+        dirswap.swap_publish(
             self.df_dir,
             lambda tmp: dfx.write.mode("overwrite").parquet(tmp),
         )
@@ -349,13 +335,11 @@ class StreamingBm25Index:
         recoverable; a crash between swaps leaves a stale sidecar that
         the NEXT compaction rebuilds from the already-compacted
         postings)."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         pos = self.postings_df(spark)
         if pos is None:
             return 0
         merged = pos.dropDuplicates(["__id", "__tok"]).repartition(target_files)
-        swap_publish(
+        dirswap.swap_publish(
             self.postings_dir,
             lambda tmp: merged.write.mode("overwrite").parquet(tmp),
         )
@@ -383,32 +367,11 @@ class StreamingBm25Index:
             .agg(F.count(F.lit(1)).cast("long").alias("__tf"))
         )
 
-    def _batch_key(self, new: DataFrame) -> int:
-        """Deterministic batch identity: xor of the xxhash64 of the
-        batch's DISTINCT NEW (post-anti-join) doc ids — order-free, and
-        a re-delivered batch reproduces it exactly.  The distinct is
-        load-bearing: ``new`` is per-(doc, token) postings rows, so a
-        raw xor would fold each id in once per distinct token and any
-        doc with an even token count would cancel to 0, colliding
-        unrelated batches (and matching compact_index's sentinel, which
-        xors distinct ids).  The one driver-side scalar in the loop
-        (same class as the bloom gauge in bloom_stream.py): one long
-        off a checkpointed batch-sized aggregate, never data."""
-        return (
-            new.select("__id")
-            .distinct()
-            .agg(F.expr("bit_xor(xxhash64(__id))"))
-            .first()[0]
-        )
-
     def _landed(self, spark: SparkSession, d: str, key: int) -> bool:
-        """Has this batch's append already committed into ``d``?  The
-        match log is partitioned by __batch_key, so its check is a
-        DIRECTORY-NAME lookup — no data scan; the tiny sidecars are
-        read key-column-only."""
-        if d == self.match_dir:
-            return os.path.isdir(os.path.join(d, f"__batch_key={key}"))
-        if not self._has_files(d):
+        """Has this batch's delta already committed into sidecar ``d``?
+        The tiny sidecars are read key-column-only (the match log's
+        guard is ``dirswap.append_once``)."""
+        if not dirswap.has_parquet(d):
             return False
         return (
             spark.read.parquet(d)
@@ -451,27 +414,28 @@ class StreamingBm25Index:
         # the old eager guarantee with one driver job instead of three
         # (eager-materialize + take(1) + key) — r15 verdict item 6
         new = local_checkpoint(new)
-        key = self._batch_key(new)
+        # batch identity over the DISTINCT new doc ids (``new`` holds one
+        # row per (doc, token): a raw-row xor would cancel even counts)
+        key = dirswap.batch_key(new, "__id")
         if key is None:
             # bit_xor over zero rows: fully-committed re-delivery (or
             # an empty batch) — same exit the old take(1) guard took
             return
-        if seen is not None and not self._landed(spark, self.match_dir, key):
-            # statistics AS OF the pre-batch index, from the sidecars
+        if seen is not None:
+            # statistics AS OF the pre-batch index, from the sidecars —
+            # read only when the match append has not landed yet
             q = new.select(F.col("__id").alias("query_id"), "__tok")
-            matches = score_against_postings(
-                seen,
-                q,
-                self.k,
-                stats=self.sidecar_stats(spark),
-                dfx=self.sidecar_df(spark),
-                broadcast_query=True,  # a micro-batch IS small
-            )
-            (
-                matches.withColumn("__batch_key", F.lit(key))
-                .write.partitionBy("__batch_key")
-                .mode("append")
-                .parquet(self.match_dir)
+            dirswap.append_once(
+                lambda: score_against_postings(
+                    seen,
+                    q,
+                    self.k,
+                    stats=self.sidecar_stats(spark),
+                    dfx=self.sidecar_df(spark),
+                    broadcast_query=True,  # a micro-batch IS small
+                ),
+                self.match_dir,
+                key,
             )
         if not self._landed(spark, self.stats_dir, key):
             (
@@ -505,12 +469,9 @@ class StreamingBm25Index:
         and a crash mid-collapse heals via the dirswap.  The collapse
         sums the SIDECARS themselves — sidecar-sized work, never a
         postings scan."""
-        import glob
-
-        n_files = len(glob.glob(os.path.join(self.df_dir, "*.parquet")))
+        n_files = len(list(dirswap.parquet_files(self.df_dir)))
         if n_files <= self.sidecar_compact_files:
             return
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
 
         # Materialize the sentinel + sums DRIVER-SIDE before any swap:
         # the stats frame is lazy, so re-evaluating it after
@@ -533,7 +494,7 @@ class StreamingBm25Index:
             F.lit(int(row["__n_docs"])).cast("long").alias("__n_docs"),
             F.lit(int(row["__sum_dl"])).cast("long").alias("__sum_dl"),
         )
-        swap_publish(
+        dirswap.swap_publish(
             self.stats_dir,
             lambda tmp: stats.write.mode("overwrite").parquet(tmp),
         )
@@ -546,7 +507,7 @@ class StreamingBm25Index:
             .select(key.alias("__batch_key"), "__tok", "__df")
             .coalesce(1)
         )
-        swap_publish(
+        dirswap.swap_publish(
             self.df_dir,
             lambda tmp: dfx.write.mode("overwrite").parquet(tmp),
         )

@@ -62,6 +62,7 @@ from storm_dynamic_spout_spark.operators.ranking import (
     normalized_strength_report,
     pairwise_win_counts,
 )
+from storm_dynamic_spout_spark.streaming import dirswap
 
 #: MM iterations per micro-batch — warm-started, so a handful per batch
 #: converges across batches (geometric per-iteration contraction).
@@ -98,12 +99,8 @@ class StreamingBradleyTerry:
             else pairs_compact_files
         )
         os.makedirs(self.pairs_dir, exist_ok=True)
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.strengths_dir)
-        recover_interrupted_swap(self.pairs_dir)
+        dirswap.recover_interrupted_swap(self.strengths_dir)
+        dirswap.recover_interrupted_swap(self.pairs_dir)
 
     # -- state ---------------------------------------------------------------
 
@@ -119,18 +116,13 @@ class StreamingBradleyTerry:
             json.dump({"last_batch_id": int(batch_id)}, fh)
         os.replace(tmp, self.meta_path)
 
-    def _has_files(self, d: str) -> bool:
-        return os.path.isdir(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        )
-
     def cumulative_pairs(self, spark: SparkSession) -> DataFrame | None:
         """The canonical pair table summed over all committed deltas.
         ``dropDuplicates`` over the full delta row is the idempotency
         repair: a crash-replayed append duplicates rows EXACTLY (same
         batch id, same pair, same counts), so the dedup restores the
         once-only sum."""
-        if not self._has_files(self.pairs_dir):
+        if not dirswap.has_parquet(self.pairs_dir):
             return None
         return (
             spark.read.parquet(self.pairs_dir)
@@ -144,7 +136,7 @@ class StreamingBradleyTerry:
 
     def strengths(self, spark: SparkSession) -> DataFrame | None:
         """Raw micro-unit state (item, __p_micro, as_of_batch)."""
-        if not self._has_files(self.strengths_dir):
+        if not dirswap.has_parquet(self.strengths_dir):
             return None
         return spark.read.parquet(self.strengths_dir)
 
@@ -214,9 +206,7 @@ class StreamingBradleyTerry:
             "__p_micro",
             F.lit(int(batch_id)).cast("long").alias("as_of_batch"),
         )
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
-        swap_publish(
+        dirswap.swap_publish(
             self.strengths_dir,
             lambda tmp: new_state.write.mode("overwrite").parquet(tmp),
         )
@@ -232,19 +222,15 @@ class StreamingBradleyTerry:
         with the committed ``batch_id`` — is replay-safe.  Work is
         pair-vocabulary-sized; a crash mid-collapse heals via the
         dirswap."""
-        import glob
-
-        n_files = len(glob.glob(os.path.join(self.pairs_dir, "*.parquet")))
+        n_files = len(list(dirswap.parquet_files(self.pairs_dir)))
         if n_files <= self.pairs_compact_files:
             return
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         folded = (
             self.cumulative_pairs(spark)
             .withColumn("__batch_id", F.lit(int(batch_id)).cast("long"))
             .coalesce(1)
         )
-        swap_publish(
+        dirswap.swap_publish(
             self.pairs_dir,
             lambda tmp: folded.write.mode("overwrite").parquet(tmp),
         )

@@ -46,6 +46,7 @@ from storm_dynamic_spout_spark.operators.dedup import (
     MINHASH_SEEDS,
     minhash_signature,
 )
+from storm_dynamic_spout_spark.streaming import dirswap
 
 _BAND_COLS = [f"band_{b}" for b in range(len(MINHASH_BANDS))]
 _SIG_COLS = [f"minhash_{s}" for s in MINHASH_SEEDS]
@@ -72,30 +73,17 @@ class StreamingDedupIndex:
         os.makedirs(self.dup_dir, exist_ok=True)
         # heal a crash inside a previous compact_index swap — without
         # this, the makedirs above would present a silently-empty index
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.index_dir)
+        dirswap.recover_interrupted_swap(self.index_dir)
 
     # -- state ---------------------------------------------------------------
 
-    def _has_files(self, d: str) -> bool:
-        # the dup log is partitioned by __batch_key (subdirs), the
-        # index dir is flat — walk covers both
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for f in files
-        )
-
     def index_df(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.index_dir):
+        if not dirswap.has_parquet(self.index_dir):
             return None
         return spark.read.parquet(self.index_dir)
 
     def duplicates(self, spark: SparkSession) -> DataFrame | None:
-        if not self._has_files(self.dup_dir):
+        if not dirswap.has_parquet(self.dup_dir):
             return None
         return spark.read.parquet(self.dup_dir)
 
@@ -109,13 +97,11 @@ class StreamingDedupIndex:
         Crash-safe via streaming/dirswap.py: the constructor heals any
         interrupted swap, so a crash mid-compaction can never surface
         as an empty index on restart."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         idx = self.index_df(spark)
         if idx is None:
             return 0
         merged = idx.dropDuplicates([self.id_col]).repartition(target_files)
-        swap_publish(
+        dirswap.swap_publish(
             self.index_dir,
             lambda tmp: merged.write.mode("overwrite").parquet(tmp),
         )
@@ -171,11 +157,10 @@ class StreamingDedupIndex:
         materialize BEFORE the index append so their lineage reads the
         pre-append index files.
 
-        Idempotency under at-least-once (round 14, the bm25/ann guard
-        pattern): the dup-log append is guarded by a deterministic
-        batch key (partition-dirname lookup) and the signature append
-        anti-joins already-indexed ids, so BOTH state appends are
-        exactly-once under whole-batch re-delivery and every
+        Idempotency under at-least-once: the dup-log append is keyed
+        (``dirswap.append_once``, a partition-dirname lookup) and the
+        signature append anti-joins already-indexed ids, so BOTH state
+        appends are exactly-once under whole-batch re-delivery and every
         crash-between-appends window.  ``sink(unique_docs)`` is the one
         at-least-once edge: a replay re-invokes it with the identical
         unique set — downstream sinks idempote on doc id (the standard
@@ -185,12 +170,7 @@ class StreamingDedupIndex:
         # deterministic batch identity over the batch's distinct ids —
         # dedup cannot anti-join the whole batch away (dup docs never
         # enter the index), so the key is over the FULL batch
-        key = (
-            batch_df.select(self.id_col)
-            .distinct()
-            .agg(F.expr(f"bit_xor(xxhash64({self.id_col}))"))
-            .first()[0]
-        )
+        key = dirswap.batch_key(batch_df, self.id_col)
         if key is None:
             return  # empty batch
         seen = self.index_df(spark)
@@ -226,18 +206,10 @@ class StreamingDedupIndex:
         dup_ids = best.select(F.col("__new_id").alias(self.id_col))
         unique = batch_df.join(dup_ids, self.id_col, "left_anti")
         sink(unique)
-        if not os.path.isdir(
-            os.path.join(self.dup_dir, f"__batch_key={key}")
-        ):
-            dup_log = batch_df.join(
-                best, batch_df[self.id_col] == best["__new_id"]
-            ).select(self.id_col, "matched_id", "agreement")
-            (
-                dup_log.withColumn("__batch_key", F.lit(int(key)).cast("long"))
-                .write.partitionBy("__batch_key")
-                .mode("append")
-                .parquet(self.dup_dir)
-            )
+        dup_log = batch_df.join(
+            best, batch_df[self.id_col] == best["__new_id"]
+        ).select(self.id_col, "matched_id", "agreement")
+        dirswap.append_once(dup_log, self.dup_dir, key)
         # UNIQUE docs' signatures enter the index (duplicates must not:
         # a dup matching a dup would chain clusters through the log);
         # the anti-join on already-indexed ids makes this append — the

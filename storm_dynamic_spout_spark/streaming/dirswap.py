@@ -1,16 +1,40 @@
-"""Crash-safe directory swap for compacting append-only parquet state.
+"""The on-disk parquet state directories of the stateful streams.
+
+Every stateful stream owner (the dedup/ANN/BM25/Bradley-Terry/bloom
+indexes, :class:`IdempotentParquetSink`, the retry table, and the
+firehose/app output dirs) keeps its state as parquet directories on the
+driver's filesystem.  This module owns the four rules those directories
+follow, so each decision has one code path:
+
+1. **Presence means what Spark lists.**  :func:`has_parquet` is true iff
+   ``spark.read.parquet(d)`` would list a data file: it walks
+   subdirectories and prunes what Spark's file index hides — names
+   starting with ``_`` or ``.`` (except ``name=value`` partition dirs)
+   and in-flight ``._COPYING_`` files.  A crash-left ``_temporary/``
+   therefore reads as "no state yet", not as a directory Spark cannot
+   infer a schema from.
+2. **The batch key.**  :func:`batch_key` is ``bit_xor(xxhash64(id))``
+   over a batch's DISTINCT ids (``None`` for an empty batch): order-free,
+   reproduced exactly by a re-delivery, and immune to the duplicate-row
+   cancellation a raw-row XOR suffers.
+3. **Keyed append.**  :func:`append_once` lands a batch's rows under a
+   ``__batch_key=<key>`` partition dir and skips the append when that
+   dir already exists — the landed-check for a re-delivered batch is a
+   directory-name lookup, never a data scan.
+4. **Compaction keeps the layout.**  A keyed directory compacts into ONE
+   ``__batch_key=`` partition (:func:`keyed_writer`), a flat one stays
+   flat: next to partition dirs, Spark silently skips top-level files.
+   Compactions publish through :func:`swap_publish`.
 
 The naive compact — write merged data to ``tmp``, ``rename(live, old)``,
 ``rename(tmp, live)``, ``rmtree(old)`` — has a window between the two
 renames where the live directory does not exist.  A crash there, plus a
 restart whose ``makedirs(exist_ok=True)`` recreates the directory
 empty, silently loses the whole index while the data sits intact in the
-orphaned ``old`` dir.  (The exact failure mode the continuous rollup
-fixed with versioned dirs; this is the shared fix for the streaming
-dedup/ANN index compactions.)
+orphaned ``old`` dir.
 
 ``swap_publish`` performs the swap; ``recover_interrupted_swap`` heals
-every crash state on startup:
+every crash state on open:
 
 - live dir has data              → any ``-compact-*`` / ``-old-*``
   orphans are leftovers of a completed or aborted run; delete them.
@@ -24,6 +48,9 @@ every crash state on startup:
 
 Completeness = the ``_SUCCESS`` marker Spark writes after a successful
 job commit — a partially-written directory is never promoted.
+
+Callers use this module through its attributes (``dirswap.swap_publish``)
+so a wrapper installed on the module sees every call.
 """
 
 from __future__ import annotations
@@ -32,15 +59,70 @@ import glob
 import os
 import shutil
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+
+from pyspark.sql import DataFrame, DataFrameWriter
+from pyspark.sql import functions as F
+
+BATCH_KEY_COL = "__batch_key"
+
+
+def _listed(name: str) -> bool:
+    """Spark's file-index filter (``HadoopFSUtils.shouldFilterOutPathName``)."""
+    if name.startswith(".") or name.endswith("._COPYING_"):
+        return False
+    return not name.startswith("_") or "=" in name
+
+
+def parquet_files(d: str) -> Iterator[str]:
+    """The parquet data files ``spark.read.parquet(d)`` would list."""
+    for root, dirs, files in os.walk(d):
+        dirs[:] = [x for x in dirs if _listed(x)]
+        for f in files:
+            if f.endswith(".parquet") and _listed(f):
+                yield os.path.join(root, f)
+
+
+def has_parquet(d: str) -> bool:
+    """True iff ``d`` holds state Spark can read (stops at the first
+    data file found)."""
+    return next(parquet_files(d), None) is not None
+
+
+def batch_key(df: DataFrame, id_col: str) -> int | None:
+    """Deterministic batch identity: ``bit_xor(xxhash64(id))`` over the
+    DISTINCT ids of ``df`` — one driver-side scalar; ``None`` when empty."""
+    return (
+        df.select(id_col)
+        .distinct()
+        .agg(F.expr(f"bit_xor(xxhash64({id_col}))"))
+        .first()[0]
+    )
+
+
+def keyed_writer(df: DataFrame, key: int) -> DataFrameWriter:
+    """``df``'s writer into the ``__batch_key=<key>`` partition."""
+    return (
+        df.withColumn(BATCH_KEY_COL, F.lit(int(key)).cast("long"))
+        .write.partitionBy(BATCH_KEY_COL)
+    )
+
+
+def append_once(
+    rows: DataFrame | Callable[[], DataFrame], d: str, key: int
+) -> None:
+    """Append ``rows`` to ``d`` under ``__batch_key=<key>`` unless that
+    partition already landed.  ``rows`` may be a zero-argument callable,
+    so a frame whose construction reads state (schema-inference jobs)
+    is only built when the append runs."""
+    if os.path.isdir(os.path.join(d, f"{BATCH_KEY_COL}={key}")):
+        return
+    df = rows() if callable(rows) else rows
+    keyed_writer(df, key).mode("append").parquet(d)
 
 
 def _complete(d: str) -> bool:
     return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
-
-
-def _has_data(d: str) -> bool:
-    return os.path.isdir(d) and any(f.endswith(".parquet") for f in os.listdir(d))
 
 
 def swap_publish(live_dir: str, write_tmp: Callable[[str], None]) -> None:
@@ -65,7 +147,7 @@ def recover_interrupted_swap(live_dir: str) -> str | None:
     dir was restored from, or None if no recovery was needed."""
     tmps = sorted(glob.glob(f"{live_dir}-compact-*"))
     olds = sorted(glob.glob(f"{live_dir}-old-*"))
-    if _has_data(live_dir):
+    if has_parquet(live_dir):
         for d in tmps + olds:
             shutil.rmtree(d, ignore_errors=True)
         return None

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.operators.layout import write_clustered
+from storm_dynamic_spout_spark.streaming import dirswap
 from storm_dynamic_spout_spark.streaming.file_topic import FileTopic
 from storm_dynamic_spout_spark.streaming.filter_chain import FilterChain
 from storm_dynamic_spout_spark.streaming.metrics import MetricsRecorder
@@ -113,11 +114,7 @@ class Firehose:
         self.query = None
         os.makedirs(output_dir, exist_ok=True)
         # heal a crash inside a previous compact_output swap
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(output_dir)
+        dirswap.recover_interrupted_swap(output_dir)
 
     # -- the per-micro-batch control-plane preamble --
     def _refresh_chain(self) -> FilterChain:
@@ -193,10 +190,8 @@ class Firehose:
         schema = T.StructType(
             list(TOPIC_SCHEMA.fields) + [T.StructField("event_date", T.DateType())]
         )
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         df = self.spark.read.schema(schema).parquet(self.output_dir)
-        swap_publish(
+        dirswap.swap_publish(
             self.output_dir,
             lambda tmp: write_clustered(
                 df, tmp, partition_by=["event_date"],

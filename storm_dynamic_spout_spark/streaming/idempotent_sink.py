@@ -6,12 +6,11 @@ streams invoke stayed at-least-once by contract: a replayed batch
 re-invokes the callback with the identical rows, and idempotence was
 the downstream's problem (SEMANTICS row 11).  This helper closes that
 last edge for the common case — "write the stream's output to a
-parquet table" — with the SAME deterministic batch-key partition guard
-the state appends use (streaming/dedup_stream.py process_batch /
-bm25_stream.py _landed): the batch's distinct ids fold to a key via
-``bit_xor(xxhash64(id))``, rows land under a ``__batch_key=<key>``
-partition directory, and a re-delivered batch whose partition dir
-already exists is skipped without reading a row.
+parquet table" — with the SAME keyed append the state logs use
+(streaming/dirswap.py): the batch's distinct ids fold to a key
+(``batch_key``), rows land under a ``__batch_key=<key>`` partition
+directory (``append_once``), and a re-delivered batch whose partition
+dir already exists is skipped without reading a row.
 
 Custom callbacks keep the documented at-least-once contract; this is
 the opt-in engine-owned alternative, usable directly as the ``sink``
@@ -42,83 +41,58 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from storm_dynamic_spout_spark.streaming import dirswap
 
 
 class IdempotentParquetSink:
     """Batch-key-guarded parquet appender; call it like a sink."""
 
-    BATCH_KEY_COL = "__batch_key"
-
     def __init__(self, out_dir: str, id_col: str = "doc_id") -> None:
         self.out_dir = out_dir
         self.id_col = id_col
         os.makedirs(out_dir, exist_ok=True)
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.out_dir)
+        dirswap.recover_interrupted_swap(self.out_dir)
 
     # -- the sink contract ---------------------------------------------------
 
     def __call__(self, batch_df: DataFrame) -> None:
-        key = (
-            batch_df.select(self.id_col)
-            .distinct()
-            .agg(F.expr(f"bit_xor(xxhash64({self.id_col}))"))
-            .first()[0]
-        )
+        key = dirswap.batch_key(batch_df, self.id_col)
         if key is None:
             return  # empty batch: nothing to land, nothing to guard
-        if os.path.isdir(
-            os.path.join(self.out_dir, f"{self.BATCH_KEY_COL}={key}")
-        ):
-            return  # re-delivery: the batch already landed
-        (
-            batch_df.withColumn(
-                self.BATCH_KEY_COL, F.lit(int(key)).cast("long")
-            )
-            .write.partitionBy(self.BATCH_KEY_COL)
-            .mode("append")
-            .parquet(self.out_dir)
-        )
+        # a re-delivery finds its partition dir and lands nothing
+        dirswap.append_once(batch_df, self.out_dir, key)
 
     # -- reads + maintenance -------------------------------------------------
 
-    def _has_files(self, d: str) -> bool:
-        return any(
-            f.endswith(".parquet")
-            for _, _, files in os.walk(d)
-            for f in files
-        )
-
     def rows(self, spark: SparkSession) -> "DataFrame | None":
         """Everything landed so far, without the guard column."""
-        if not self._has_files(self.out_dir):
+        if not dirswap.has_parquet(self.out_dir):
             return None
-        return spark.read.parquet(self.out_dir).drop(self.BATCH_KEY_COL)
+        return spark.read.parquet(self.out_dir).drop(dirswap.BATCH_KEY_COL)
 
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
-        """Fold the per-batch partition dirs into ``target_files`` flat
-        files (maintenance window — same caveat as the indexes'
-        ``compact_index``: not concurrent with deliveries).  The guard
-        column is retired with the partitions: post-compaction the
-        table is a plain parquet dir, and FUTURE deliveries start a
-        fresh guard namespace — correct because compaction runs at a
+        """Fold the per-batch partition dirs into ONE ``__batch_key=``
+        partition of ``target_files`` files, keyed by the batch key of
+        every landed id (maintenance window — same caveat as the
+        indexes' ``compact_index``: not concurrent with deliveries).
+        The table keeps its keyed layout, so later deliveries and later
+        compactions read every row.  Pre-compaction batch keys retire
+        with their dirs — correct because compaction runs at a
         CHECKPOINT-COMMITTED boundary (stream stopped, every delivered
         batch committed), and Structured Streaming never re-delivers a
-        committed batch, so no pre-compaction batch can replay into
-        the fresh namespace.  Crash-safe via dirswap; returns the row
+        committed batch.  Crash-safe via dirswap; returns the row
         count."""
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         rows = self.rows(spark)
         if rows is None:
             return 0
+        # driver-side literal BEFORE the swap retires the dir it reads
+        key = dirswap.batch_key(rows, self.id_col)
         merged = rows.repartition(target_files)
-        swap_publish(
+        dirswap.swap_publish(
             self.out_dir,
-            lambda tmp: merged.write.mode("overwrite").parquet(tmp),
+            lambda tmp: dirswap.keyed_writer(merged, key)
+            .mode("overwrite")
+            .parquet(tmp),
         )
         return spark.read.parquet(self.out_dir).count()

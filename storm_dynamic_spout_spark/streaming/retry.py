@@ -27,10 +27,13 @@ Policy semantics are kept bit-for-bit with the reference:
 from __future__ import annotations
 
 import math
+import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from storm_dynamic_spout_spark.streaming import dirswap
 
 ATTEMPTS_COL = "retry_attempts"
 NEXT_TS_COL = "retry_next_attempt_ts_ms"
@@ -189,18 +192,12 @@ class RetryTableRunner:
         ``event_date`` via the clustered-layout writer, so the 100 TB
         failure-triage query ("yesterday's dead letters") prunes
         directories instead of scanning the sink's full history."""
-        import os
-
         self.retries_dir = retries_dir
         self.dlq_dir = dlq_dir
         self.policy = policy
         self.failure_condition_sql = failure_condition_sql
         # heal a crash inside a previous retry-table publish swap
-        from storm_dynamic_spout_spark.streaming.dirswap import (
-            recover_interrupted_swap,
-        )
-
-        recover_interrupted_swap(self.retries_dir)
+        dirswap.recover_interrupted_swap(self.retries_dir)
         self.dlq_partition_by_date = dlq_partition_by_date
         os.makedirs(dlq_dir, exist_ok=True)
         # earliest next-attempt time of a retry-table row whose next
@@ -208,18 +205,11 @@ class RetryTableRunner:
         # runner's own swap writes; None while unknown (a table left by
         # an earlier runner, or a swap that did not finish)
         self._exhaust_due_ms: float | None = (
-            None if self._has_retries() else math.inf
-        )
-
-    def _has_retries(self) -> bool:
-        import os
-
-        return os.path.isdir(self.retries_dir) and any(
-            f.endswith(".parquet") for f in os.listdir(self.retries_dir)
+            None if dirswap.has_parquet(self.retries_dir) else math.inf
         )
 
     def _load_retries(self, spark, like: DataFrame) -> DataFrame | None:
-        if not self._has_retries():
+        if not dirswap.has_parquet(self.retries_dir):
             return None
         return spark.read.schema(_with_retry_cols(like.schema)).parquet(
             self.retries_dir
@@ -297,8 +287,6 @@ class RetryTableRunner:
         elif write_dlq:
             exhausted.write.mode("append").parquet(self.dlq_dir)
 
-        from storm_dynamic_spout_spark.streaming.dirswap import swap_publish
-
         state = Observation()
         keep = retryable if pending is None else pending.unionByName(retryable)
         exhausts_next = ~self.policy.retry_further_col(F.col(ATTEMPTS_COL) + 1)
@@ -306,7 +294,7 @@ class RetryTableRunner:
             state, F.min(F.when(exhausts_next, F.col(NEXT_TS_COL))).alias("due_ms")
         )
         self._exhaust_due_ms = None
-        swap_publish(
+        dirswap.swap_publish(
             self.retries_dir,
             lambda tmp: keep.write.mode("overwrite").parquet(tmp),
         )
@@ -316,9 +304,9 @@ class RetryTableRunner:
         return RetrySplit(counts["failed"], counts["exhausted"], write_dlq)
 
     def dlq(self, spark, like: DataFrame) -> DataFrame:
-        import os
-
         schema = _with_retry_cols(like.schema)
+        if not dirswap.has_parquet(self.dlq_dir):
+            return spark.createDataFrame([], schema)
         if self.dlq_partition_by_date:
             from pyspark.sql.types import DateType, StructField, StructType
 
@@ -327,11 +315,5 @@ class RetryTableRunner:
             )
         else:
             read_schema = schema
-        empty = not os.path.isdir(self.dlq_dir) or not any(
-            f.endswith(".parquet") or os.path.isdir(os.path.join(self.dlq_dir, f))
-            for f in os.listdir(self.dlq_dir)
-        )
-        if empty:
-            return spark.createDataFrame([], schema)
         out = spark.read.schema(read_schema).parquet(self.dlq_dir)
         return out.drop("event_date") if self.dlq_partition_by_date else out

@@ -7,25 +7,17 @@ maintenance window, per state table: delta-file count, row count, and
 whether the configured compaction threshold is breached.
 
 Scale shape: the state dirs are METADATA-sized (file listings walk the
-driver's filesystem view — the same os.walk the indexes' own guards
-use), and the row counts are parquet-footer COUNT(*) scans that never
-materialize the data.  Nothing here touches the corpus.
+driver's filesystem view — ``dirswap.parquet_files``, the listing the
+indexes' own guards use), and the row counts are parquet-footer
+COUNT(*) scans that never materialize the data.  Nothing here touches
+the corpus.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-
-def _parquet_files(d: str) -> list[str]:
-    return sorted(
-        os.path.join(root, f)
-        for root, _, files in os.walk(d)
-        for f in files
-        if f.endswith(".parquet")
-    )
+from storm_dynamic_spout_spark.streaming import dirswap
 
 
 def state_table_report(
@@ -45,17 +37,17 @@ def state_table_report(
     parquet metadata (COUNT(*) over footers) — no data scan."""
     rows = []
     for name in sorted(tables):
-        files = _parquet_files(tables[name])
-        if files:
+        n_files = len(list(dirswap.parquet_files(tables[name])))
+        if n_files:
             n_rows = spark.read.parquet(tables[name]).count()
         else:
             n_rows = 0
         rows.append(
             (
                 name,
-                len(files),
+                n_files,
                 int(n_rows),
-                len(files) > compact_threshold,
+                n_files > compact_threshold,
             )
         )
     return spark.createDataFrame(

@@ -27,6 +27,29 @@ def test_first_batch_produces_no_matches_but_indexes(spark):
     assert idx.index_df(spark).count() == 50
 
 
+def test_crash_left_temporary_dir_reads_as_fresh_state(spark, tmp_path):
+    """A killed first append leaves only ``_temporary/0/task_*/part-*``
+    in the index dir.  Spark lists no file there, so the index must read
+    as empty and accept its first batch, not fail schema inference."""
+    import glob
+    import os
+    import shutil
+
+    batch = _emb(spark).limit(20)
+    ref = StreamingAnnIndex(str(tmp_path / "ref"))
+    ref.process_batch(batch)
+    part = glob.glob(os.path.join(ref.index_dir, "part-*.parquet"))[0]
+    idx = StreamingAnnIndex(str(tmp_path / "crashed"))
+    task_dir = os.path.join(idx.index_dir, "_temporary", "0", "task_0000_m_000000")
+    os.makedirs(task_dir)
+    shutil.copy(part, task_dir)
+    assert idx.index_df(spark) is None
+    idx.process_batch(batch)
+    assert idx.matches(spark) is None
+    ids = {r["__id"] for r in idx.index_df(spark).select("__id").collect()}
+    assert ids == {r["vec_id"] for r in batch.select("vec_id").collect()}
+
+
 def test_second_batch_matches_only_against_prebatch_index(spark):
     idx = StreamingAnnIndex(tempfile.mkdtemp(prefix="ann-t2-"))
     e = _emb(spark)

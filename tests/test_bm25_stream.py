@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.engine import load_table
 from storm_dynamic_spout_spark.streaming.bm25_stream import StreamingBm25Index
+from storm_dynamic_spout_spark.streaming.dirswap import batch_key
 
 SF = "/root/testdata/sf0.001"
 
@@ -308,8 +309,8 @@ def test_batch_key_uses_distinct_ids_not_postings_rows(spark):
     # two different docs, each with exactly 2 distinct tokens (even)
     b1 = spark.createDataFrame([(1, "alpha beta")], "doc_id int, text string")
     b2 = spark.createDataFrame([(2, "alpha gamma")], "doc_id int, text string")
-    k1 = idx._batch_key(idx._prepared(b1))
-    k2 = idx._batch_key(idx._prepared(b2))
+    k1 = batch_key(idx._prepared(b1), "__id")
+    k2 = batch_key(idx._prepared(b2), "__id")
     assert k1 != k2, "even-token-count batches collided on the batch key"
     idx.process_batch(b1)
     idx.process_batch(b2)

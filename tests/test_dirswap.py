@@ -16,6 +16,7 @@ from storm_dynamic_spout_spark.engine import load_table
 from storm_dynamic_spout_spark.streaming.ann_stream import StreamingAnnIndex
 from storm_dynamic_spout_spark.streaming.dedup_stream import StreamingDedupIndex
 from storm_dynamic_spout_spark.streaming.dirswap import (
+    has_parquet,
     recover_interrupted_swap,
     swap_publish,
 )
@@ -108,3 +109,39 @@ def test_swap_publish_roundtrip_without_spark(tmp_path):
     swap_publish(live, write_tmp)
     assert sorted(os.listdir(live)) == ["_SUCCESS", "b.parquet"]
     assert recover_interrupted_swap(live) is None
+
+
+def _touch(path):
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    open(path, "w").close()
+
+
+def test_partitioned_live_dir_with_complete_old_heals(tmp_path):
+    """State: a partitioned output compaction (Firehose.compact_output,
+    DynamicStreamApp.optimize_output) crashed between the second rename
+    and rmtree(old).  The live dir holds data only inside partition
+    dirs; reopening must keep it and delete the complete orphan."""
+    live = str(tmp_path / "out")
+    old = f"{live}-old-deadbeef"
+    for d in (live, old):
+        part = os.path.join(d, "event_date=2026-01-01", "route_id=firehose")
+        _touch(os.path.join(part, "part-0.parquet"))
+        _touch(os.path.join(d, "_SUCCESS"))
+    assert recover_interrupted_swap(live) is None
+    assert not os.path.exists(old)
+    assert has_parquet(live)
+
+
+def test_has_parquet_lists_what_spark_lists(tmp_path):
+    """Presence follows Spark's file index: hidden ``_``/``.`` paths are
+    pruned, ``name=value`` partition dirs (even ``__batch_key=``) are
+    walked."""
+    d = str(tmp_path / "state")
+    assert not has_parquet(d)  # missing dir
+    _touch(os.path.join(d, "_temporary", "0", "task_0", "part-0.parquet"))
+    _touch(os.path.join(d, ".hidden", "part-0.parquet"))
+    _touch(os.path.join(d, ".part-0.parquet"))
+    _touch(os.path.join(d, "_SUCCESS"))
+    assert not has_parquet(d)
+    _touch(os.path.join(d, "__batch_key=-7", "part-0.parquet"))
+    assert has_parquet(d)

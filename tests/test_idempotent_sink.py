@@ -111,13 +111,28 @@ def test_compact_folds_partitions_and_preserves_rows(spark, tmp_path):
     n = sink.compact(spark, target_files=1)
     assert n == 2
     assert _rows(spark, sink) == before
-    # partition dirs retired: flat parquet files only
+    # the per-batch partition dirs fold into one keyed partition
     subdirs = [
         d
         for d in os.listdir(sink.out_dir)
         if os.path.isdir(os.path.join(sink.out_dir, d))
     ]
-    assert subdirs == []
+    assert len(subdirs) == 1 and subdirs[0].startswith("__batch_key=")
+
+
+def test_deliveries_and_compactions_interleave_without_losing_rows(
+    spark, tmp_path
+):
+    """Compaction keeps the keyed layout, so a delivery after it adds a
+    partition next to the folded one and a second compaction keeps
+    every row."""
+    sink = IdempotentParquetSink(str(tmp_path / "out"))
+    sink(_docs_df(spark, [(0, DOC_A)]))
+    assert sink.compact(spark) == 1
+    sink(_docs_df(spark, [(1, DOC_B)]))
+    assert [i for i, _ in _rows(spark, sink)] == [0, 1]
+    assert sink.compact(spark) == 2
+    assert [i for i, _ in _rows(spark, sink)] == [0, 1]
 
 
 def test_constructor_heals_interrupted_compact_swap(spark, tmp_path):

@@ -13,10 +13,10 @@ import threading
 from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.streaming.app import (
-    _has_parquet,
     delivery_from_observation,
     observe_delivery,
 )
+from storm_dynamic_spout_spark.streaming.dirswap import has_parquet
 from storm_dynamic_spout_spark.streaming.retry import (
     ATTEMPTS_COL,
     ExponentialBackoffRetryPolicy,
@@ -121,7 +121,7 @@ def test_batch_without_failures_skips_the_dlq_append(spark, tmp_path):
     )
     assert jobs == 2  # sink write + retry-table swap
     assert split == RetrySplit(0, 0, dlq_written=False)
-    assert not _has_parquet(runner.dlq_dir)
+    assert not has_parquet(runner.dlq_dir)
     assert _retry_keys(runner, spark) == []
     assert _keys(spark.read.parquet(out)) == ["a", "b", "c"]
 
@@ -135,7 +135,7 @@ def test_failures_below_limit_run_two_jobs(spark, tmp_path):
     )
     assert jobs == 2  # sink write + retry-table swap
     assert split == RetrySplit(1, 0, dlq_written=False)
-    assert not _has_parquet(runner.dlq_dir)
+    assert not has_parquet(runner.dlq_dir)
     assert _retry_keys(runner, spark, with_attempts=True) == [("b", 1)]
 
 
