@@ -100,9 +100,10 @@ class StreamingAnnIndex:
         self.n_planes = n_planes
         os.makedirs(self.index_dir, exist_ok=True)
         os.makedirs(self.match_dir, exist_ok=True)
-        # heal a crash inside a previous compact_index swap — without
-        # this, the makedirs above would present a silently-empty index
+        # heal a crashed append or compact_index swap — without this,
+        # the makedirs above would present a silently-empty index
         dirswap.recover_interrupted_swap(self.index_dir)
+        dirswap.recover_interrupted_swap(self.match_dir)
 
     # -- state ---------------------------------------------------------------
 

@@ -226,9 +226,9 @@ class StreamingBm25Index:
         )
         for d in (self.postings_dir, self.match_dir, self.stats_dir, self.df_dir):
             os.makedirs(d, exist_ok=True)
-        # heal a crash inside a previous compact_index swap — without
-        # this, the makedirs above would present a silently-empty index
-        for d in (self.postings_dir, self.stats_dir, self.df_dir):
+            # heal a crashed append or compact_index swap — without
+            # this, the makedirs above would present a silently-empty
+            # index
             dirswap.recover_interrupted_swap(d)
 
     # -- state ---------------------------------------------------------------
@@ -421,22 +421,19 @@ class StreamingBm25Index:
             # bit_xor over zero rows: fully-committed re-delivery (or
             # an empty batch) — same exit the old take(1) guard took
             return
-        if seen is not None:
+        if seen is not None and not dirswap.landed(self.match_dir, key):
             # statistics AS OF the pre-batch index, from the sidecars —
             # read only when the match append has not landed yet
             q = new.select(F.col("__id").alias("query_id"), "__tok")
-            dirswap.append_once(
-                lambda: score_against_postings(
-                    seen,
-                    q,
-                    self.k,
-                    stats=self.sidecar_stats(spark),
-                    dfx=self.sidecar_df(spark),
-                    broadcast_query=True,  # a micro-batch IS small
-                ),
-                self.match_dir,
-                key,
+            matches = score_against_postings(
+                seen,
+                q,
+                self.k,
+                stats=self.sidecar_stats(spark),
+                dfx=self.sidecar_df(spark),
+                broadcast_query=True,  # a micro-batch IS small
             )
+            dirswap.append_once(matches, self.match_dir, key)
         if not self._landed(spark, self.stats_dir, key):
             (
                 new.select("__id", "__dl")

@@ -71,9 +71,10 @@ class StreamingDedupIndex:
         self.min_sig_agreement = min_sig_agreement
         os.makedirs(self.index_dir, exist_ok=True)
         os.makedirs(self.dup_dir, exist_ok=True)
-        # heal a crash inside a previous compact_index swap — without
-        # this, the makedirs above would present a silently-empty index
+        # heal a crashed append or compact_index swap — without this,
+        # the makedirs above would present a silently-empty index
         dirswap.recover_interrupted_swap(self.index_dir)
+        dirswap.recover_interrupted_swap(self.dup_dir)
 
     # -- state ---------------------------------------------------------------
 

@@ -12,15 +12,15 @@ follow, so each decision has one code path:
    starting with ``_`` or ``.`` (except ``name=value`` partition dirs)
    and in-flight ``._COPYING_`` files.  A crash-left ``_temporary/``
    therefore reads as "no state yet", not as a directory Spark cannot
-   infer a schema from.
+   infer a schema from; heal-on-open deletes it (below).
 2. **The batch key.**  :func:`batch_key` is ``bit_xor(xxhash64(id))``
    over a batch's DISTINCT ids (``None`` for an empty batch): order-free,
    reproduced exactly by a re-delivery, and immune to the duplicate-row
    cancellation a raw-row XOR suffers.
 3. **Keyed append.**  :func:`append_once` lands a batch's rows under a
    ``__batch_key=<key>`` partition dir and skips the append when that
-   dir already exists — the landed-check for a re-delivered batch is a
-   directory-name lookup, never a data scan.
+   dir already exists (:func:`landed`) — the landed-check for a
+   re-delivered batch is a directory-name lookup, never a data scan.
 4. **Compaction keeps the layout.**  A keyed directory compacts into ONE
    ``__batch_key=`` partition (:func:`keyed_writer`), a flat one stays
    flat: next to partition dirs, Spark silently skips top-level files.
@@ -33,8 +33,13 @@ restart whose ``makedirs(exist_ok=True)`` recreates the directory
 empty, silently loses the whole index while the data sits intact in the
 orphaned ``old`` dir.
 
-``swap_publish`` performs the swap; ``recover_interrupted_swap`` heals
-every crash state on open:
+``swap_publish`` performs the swap; ``recover_interrupted_swap`` is the
+heal-on-open every owner runs on each of its state dirs before any
+writer starts.  It first deletes a crashed append's ``_temporary/``:
+Hadoop's file committer merges every ``_temporary/0/task_*`` dir it
+finds at job commit, stale ones included, so a left-over task dir would
+publish its rows again with the next append.  Then it heals every swap
+crash state:
 
 - live dir has data              → any ``-compact-*`` / ``-old-*``
   orphans are leftovers of a completed or aborted run; delete them.
@@ -108,17 +113,16 @@ def keyed_writer(df: DataFrame, key: int) -> DataFrameWriter:
     )
 
 
-def append_once(
-    rows: DataFrame | Callable[[], DataFrame], d: str, key: int
-) -> None:
-    """Append ``rows`` to ``d`` under ``__batch_key=<key>`` unless that
-    partition already landed.  ``rows`` may be a zero-argument callable,
-    so a frame whose construction reads state (schema-inference jobs)
-    is only built when the append runs."""
-    if os.path.isdir(os.path.join(d, f"{BATCH_KEY_COL}={key}")):
-        return
-    df = rows() if callable(rows) else rows
-    keyed_writer(df, key).mode("append").parquet(d)
+def landed(d: str, key: int) -> bool:
+    """Has the batch keyed ``key`` already been appended to ``d``?"""
+    return os.path.isdir(os.path.join(d, f"{BATCH_KEY_COL}={key}"))
+
+
+def append_once(df: DataFrame, d: str, key: int) -> None:
+    """Append ``df`` to ``d`` under ``__batch_key=<key>`` unless that
+    partition already landed."""
+    if not landed(d, key):
+        keyed_writer(df, key).mode("append").parquet(d)
 
 
 def _complete(d: str) -> bool:
@@ -144,7 +148,10 @@ def swap_publish(live_dir: str, write_tmp: Callable[[str], None]) -> None:
 
 def recover_interrupted_swap(live_dir: str) -> str | None:
     """Heal an interrupted ``swap_publish``.  Returns the path the live
-    dir was restored from, or None if no recovery was needed."""
+    dir was restored from, or None if no recovery was needed.  Also
+    deletes the live dir's ``_temporary/``, so call it only while no
+    writer appends to ``live_dir``."""
+    shutil.rmtree(os.path.join(live_dir, "_temporary"), ignore_errors=True)
     tmps = sorted(glob.glob(f"{live_dir}-compact-*"))
     olds = sorted(glob.glob(f"{live_dir}-old-*"))
     if has_parquet(live_dir):

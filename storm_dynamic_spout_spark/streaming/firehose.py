@@ -113,8 +113,10 @@ class Firehose:
         self.on_batch = on_batch
         self.query = None
         os.makedirs(output_dir, exist_ok=True)
-        # heal a crash inside a previous compact_output swap
-        dirswap.recover_interrupted_swap(output_dir)
+        # heal a crashed append or compact_output swap; under the write
+        # lock, since replays may already be appending to this dir
+        with _SINK_WRITE_LOCK:
+            dirswap.recover_interrupted_swap(output_dir)
 
     # -- the per-micro-batch control-plane preamble --
     def _refresh_chain(self) -> FilterChain:

@@ -72,26 +72,24 @@ class IdempotentParquetSink:
         return spark.read.parquet(self.out_dir).drop(dirswap.BATCH_KEY_COL)
 
     def compact(self, spark: SparkSession, target_files: int = 1) -> int:
-        """Fold the per-batch partition dirs into ONE ``__batch_key=``
-        partition of ``target_files`` files, keyed by the batch key of
-        every landed id (maintenance window — same caveat as the
-        indexes' ``compact_index``: not concurrent with deliveries).
-        The table keeps its keyed layout, so later deliveries and later
-        compactions read every row.  Pre-compaction batch keys retire
-        with their dirs — correct because compaction runs at a
-        CHECKPOINT-COMMITTED boundary (stream stopped, every delivered
-        batch committed), and Structured Streaming never re-delivers a
-        committed batch.  Crash-safe via dirswap; returns the row
+        """Fold the per-batch partition dirs into ONE ``__batch_key=0``
+        partition of ``target_files`` files (maintenance window — same
+        caveat as the indexes' ``compact_index``: not concurrent with
+        deliveries).  The table keeps its keyed layout, so later
+        deliveries and later compactions read every row.  Pre-compaction
+        batch keys retire with their dirs — correct because compaction
+        runs at a CHECKPOINT-COMMITTED boundary (stream stopped, every
+        delivered batch committed), and Structured Streaming never
+        re-delivers a committed batch; so the folded partition needs no
+        particular key.  Crash-safe via dirswap; returns the row
         count."""
         rows = self.rows(spark)
         if rows is None:
             return 0
-        # driver-side literal BEFORE the swap retires the dir it reads
-        key = dirswap.batch_key(rows, self.id_col)
         merged = rows.repartition(target_files)
         dirswap.swap_publish(
             self.out_dir,
-            lambda tmp: dirswap.keyed_writer(merged, key)
+            lambda tmp: dirswap.keyed_writer(merged, 0)
             .mode("overwrite")
             .parquet(tmp),
         )

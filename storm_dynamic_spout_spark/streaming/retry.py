@@ -196,10 +196,11 @@ class RetryTableRunner:
         self.dlq_dir = dlq_dir
         self.policy = policy
         self.failure_condition_sql = failure_condition_sql
-        # heal a crash inside a previous retry-table publish swap
+        # heal a crashed append or retry-table publish swap
         dirswap.recover_interrupted_swap(self.retries_dir)
         self.dlq_partition_by_date = dlq_partition_by_date
         os.makedirs(dlq_dir, exist_ok=True)
+        dirswap.recover_interrupted_swap(dlq_dir)
         # earliest next-attempt time of a retry-table row whose next
         # failure exhausts it (inf: no such row), observed on this
         # runner's own swap writes; None while unknown (a table left by

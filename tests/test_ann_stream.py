@@ -29,8 +29,10 @@ def test_first_batch_produces_no_matches_but_indexes(spark):
 
 def test_crash_left_temporary_dir_reads_as_fresh_state(spark, tmp_path):
     """A killed first append leaves only ``_temporary/0/task_*/part-*``
-    in the index dir.  Spark lists no file there, so the index must read
-    as empty and accept its first batch, not fail schema inference."""
+    in the index dir.  Reopened, the index must read as empty, accept
+    its first batch, and hold that batch exactly once: the file
+    committer would otherwise publish the stale task file with the next
+    append."""
     import glob
     import os
     import shutil
@@ -39,13 +41,17 @@ def test_crash_left_temporary_dir_reads_as_fresh_state(spark, tmp_path):
     ref = StreamingAnnIndex(str(tmp_path / "ref"))
     ref.process_batch(batch)
     part = glob.glob(os.path.join(ref.index_dir, "part-*.parquet"))[0]
-    idx = StreamingAnnIndex(str(tmp_path / "crashed"))
-    task_dir = os.path.join(idx.index_dir, "_temporary", "0", "task_0000_m_000000")
+    workdir = str(tmp_path / "crashed")
+    task_dir = os.path.join(
+        workdir, "index", "_temporary", "0", "task_0000_m_000000"
+    )
     os.makedirs(task_dir)
     shutil.copy(part, task_dir)
+    idx = StreamingAnnIndex(workdir)
     assert idx.index_df(spark) is None
     idx.process_batch(batch)
     assert idx.matches(spark) is None
+    assert idx.index_df(spark).count() == 20
     ids = {r["__id"] for r in idx.index_df(spark).select("__id").collect()}
     assert ids == {r["vec_id"] for r in batch.select("vec_id").collect()}
 

@@ -145,3 +145,14 @@ def test_has_parquet_lists_what_spark_lists(tmp_path):
     assert not has_parquet(d)
     _touch(os.path.join(d, "__batch_key=-7", "part-0.parquet"))
     assert has_parquet(d)
+
+
+def test_heal_deletes_a_crashed_appends_temporary_dir(tmp_path):
+    """A crashed append leaves committed task output under
+    ``_temporary/``; the next append's job commit would publish it.
+    Heal-on-open deletes it and keeps the live data."""
+    live = str(tmp_path / "log")
+    _touch(os.path.join(live, "__batch_key=3", "part-0.parquet"))
+    _touch(os.path.join(live, "_temporary", "0", "task_0", "part-1.parquet"))
+    assert recover_interrupted_swap(live) is None
+    assert os.listdir(live) == ["__batch_key=3"]

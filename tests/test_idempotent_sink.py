@@ -57,6 +57,26 @@ def test_duplicate_rows_do_not_cancel_the_key(spark, tmp_path):
     assert [i for i, _ in _rows(spark, sink)] == [0, 0, 1]
 
 
+def test_crashed_append_never_surfaces_after_reopen(spark, tmp_path):
+    """A killed append can leave committed task output under
+    ``_temporary/0/task_*/__batch_key=<k>/``.  Reopening the sink must
+    drop it: the next append's job commit would otherwise publish the
+    stale partition, and the guard would then skip its redelivery."""
+    ref = IdempotentParquetSink(str(tmp_path / "ref"))
+    ref(_docs_df(spark, [(0, DOC_A)]))
+    (part_dir,) = [d for d in os.listdir(ref.out_dir) if "=" in d]
+    out = str(tmp_path / "out")
+    shutil.copytree(
+        os.path.join(ref.out_dir, part_dir),
+        os.path.join(out, "_temporary", "0", "task_0", part_dir),
+    )
+    sink = IdempotentParquetSink(out)
+    sink(_docs_df(spark, [(1, DOC_B)]))
+    assert [i for i, _ in _rows(spark, sink)] == [1]
+    sink(_docs_df(spark, [(0, DOC_A)]))  # the crashed batch, redelivered
+    assert [i for i, _ in _rows(spark, sink)] == [0, 1]
+
+
 def test_empty_batch_is_a_noop(spark, tmp_path):
     sink = IdempotentParquetSink(str(tmp_path / "out"))
     sink(_docs_df(spark, []))
