@@ -28,12 +28,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as _st
 
 from storm_dynamic_spout_spark.streaming import dirswap
-from storm_dynamic_spout_spark.streaming.file_topic import TOPIC_SCHEMA, FileTopic
+from storm_dynamic_spout_spark.streaming.file_topic import FileTopic
 from storm_dynamic_spout_spark.streaming.filter_chain import FilterChain
-from storm_dynamic_spout_spark.streaming.firehose import Firehose, write_sink_batch
+from storm_dynamic_spout_spark.streaming.firehose import (
+    SINK_SCHEMA,
+    Firehose,
+    compact_sink,
+    write_sink_batch,
+)
 from storm_dynamic_spout_spark.streaming.metrics import MetricsRecorder, make_recorder
 from storm_dynamic_spout_spark.streaming.sideline import (
     FileWatchTrigger,
@@ -41,19 +45,6 @@ from storm_dynamic_spout_spark.streaming.sideline import (
     SidelineRequest,
     SidelineType,
 )
-
-# StructType.add mutates in place — build a copy so the shared TOPIC_SCHEMA
-# used by FileTopic.read/read_stream and Firehose.output stays untouched.
-# route_id + event_date are the sink's hive-partition keys (see
-# firehose.write_sink_batch).
-_OUT_SCHEMA = _st.StructType(
-    list(TOPIC_SCHEMA.fields)
-    + [
-        _st.StructField("route_id", _st.StringType()),
-        _st.StructField("event_date", _st.DateType()),
-    ]
-)
-
 
 class RouteHighWater:
     """In-memory per-route delivered high-water marks and row counts.
@@ -156,7 +147,13 @@ def delivery_from_observation(obs, num_partitions: int) -> tuple[dict[int, int],
 
 class DynamicStreamApp:
     """The engine container: one live route + N sideline replays over a
-    partitioned topic, with persistent control state under ``workdir``."""
+    partitioned topic, with persistent control state under ``workdir``.
+
+    Every row reaches the merged output through :meth:`_deliver` (tagged
+    write + high-water record): the live route from the
+    :class:`Firehose`'s per-batch step via :meth:`_live_sink`, and the
+    replays (:meth:`run_replay`, :meth:`start_replay_stream`) with the
+    rows :meth:`SidelineController.replay_rows` selects."""
 
     def __init__(
         self,
@@ -258,64 +255,7 @@ class DynamicStreamApp:
         # cold-start warm-up BEFORE the firehose starts: the one full
         # output scan; every later high-water read is in-memory
         self._ensure_hwm_warm()
-
-        retry_runner = self.retry_runner
-        live_route_id = self.live_route_id
-        rollup = self.rollup
-        rollup_prepare = self.rollup_prepare
-        hwm = self._hwm
-        num_partitions = self.topic.num_partitions
-
-        class _TaggedFirehose(Firehose):
-            # kept rows are tagged with the route id on the way out;
-            # with a retry runner, failures detour through the retry
-            # table (due retries re-enter ahead of new input) and
-            # exhausted rows land in the DLQ instead of the output
-            def _process_batch(inner, batch_df: DataFrame, batch_id: int) -> None:
-                import time as _time
-
-                chain = inner._refresh_chain()
-                kept = chain.keep(batch_df)
-
-                def _sink(ok: DataFrame) -> None:
-                    # delivery metrics ride the write job (Observation):
-                    # per-partition maxima feed the in-memory high-water
-                    # accumulator, so progress/lag never rescan the sink
-                    ok, obs = observe_delivery(
-                        ok, num_partitions, f"deliver-{live_route_id}-{batch_id}"
-                    )
-                    write_sink_batch(ok, inner.output_dir, route_id=live_route_id)
-                    hwm.record(
-                        live_route_id, *delivery_from_observation(obs, num_partitions)
-                    )
-                    if rollup is not None:
-                        # continuous aggregate over the DELIVERED rows:
-                        # merging here (inside the sink, after the
-                        # retry split) keeps the rollup consistent with
-                        # the output table — rows that exhaust retries
-                        # into the DLQ never count; rows that succeed
-                        # on a later retry count at their delivery
-                        # batch.  The batch_id watermark still makes
-                        # checkpoint-replayed batches no-ops.
-                        prepared = (
-                            rollup_prepare(ok) if rollup_prepare is not None else ok
-                        )
-                        if rollup.process_batch(prepared, batch_id):
-                            inner.recorder.count("rollup.batches")
-
-                if retry_runner is not None:
-                    split = retry_runner.process_batch(
-                        kept, int(_time.time() * 1000), _sink
-                    )
-                    inner.recorder.count("retry.failed", split.failed)
-                    inner.recorder.count("retry.exhausted", split.exhausted)
-                    if not split.dlq_written:
-                        inner.recorder.count("retry.dlq_skipped")
-                else:
-                    _sink(kept)
-                inner.recorder.count("firehose.batches")
-
-        self._firehose = _TaggedFirehose(
+        self._firehose = Firehose(
             self.spark,
             self.topic,
             self.controller,
@@ -323,8 +263,51 @@ class DynamicStreamApp:
             checkpoint_dir=os.path.join(self.workdir, "checkpoint"),
             trigger=self.trigger,
             recorder=self.recorder,
+            sink=self._live_sink,
         )
         self._firehose.start(max_files_per_trigger=max_files_per_trigger)
+
+    def _live_sink(self, kept: DataFrame, batch_id: int) -> None:
+        """The firehose's delivery: with a retry runner, failures detour
+        through the retry table (due retries re-enter ahead of new
+        input) and exhausted rows land in the DLQ instead of the
+        output."""
+        import time as _time
+
+        def _sink(ok: DataFrame) -> None:
+            self._deliver(ok, self.live_route_id, batch_id)
+            if self.rollup is not None:
+                # continuous aggregate over the DELIVERED rows: merging
+                # here (inside the sink, after the retry split) keeps the
+                # rollup consistent with the output table — rows that
+                # exhaust retries into the DLQ never count; rows that
+                # succeed on a later retry count at their delivery batch.
+                # The batch_id watermark still makes checkpoint-replayed
+                # batches no-ops.
+                prepared = ok if self.rollup_prepare is None else self.rollup_prepare(ok)
+                if self.rollup.process_batch(prepared, batch_id):
+                    self.recorder.count("rollup.batches")
+
+        if self.retry_runner is None:
+            _sink(kept)
+            return
+        split = self.retry_runner.process_batch(kept, int(_time.time() * 1000), _sink)
+        self.recorder.count("retry.failed", split.failed)
+        self.recorder.count("retry.exhausted", split.exhausted)
+        if not split.dlq_written:
+            self.recorder.count("retry.dlq_skipped")
+
+    def _deliver(self, df: DataFrame, route_id: str, batch: int | str) -> int:
+        """The one write into the merged output: ``df`` lands tagged
+        ``route_id``, and its delivery metrics ride the write job
+        (Observation) into the in-memory high-water accumulator, so
+        progress/lag never rescan the sink.  Returns the rows written."""
+        num_partitions = self.topic.num_partitions
+        df, obs = observe_delivery(df, num_partitions, f"deliver-{route_id}-{batch}")
+        write_sink_batch(df, self.out_dir, route_id=route_id)
+        per_part, n = delivery_from_observation(obs, num_partitions)
+        self._hwm.record(route_id, per_part, n)
+        return n
 
     def process_all_available(self) -> None:
         assert self._firehose is not None, "call open() first"
@@ -363,7 +346,7 @@ class DynamicStreamApp:
         spawned: list[str] = []
         for payload in to_replay:
             route_id = f"sideline-{payload.id}"
-            if route_id not in self._replay_queries:
+            if route_id not in self._active_replays():
                 self.start_replay_stream(payload.id)
                 spawned.append(route_id)
         self.recorder.count("sideline.reconcile")
@@ -412,19 +395,11 @@ class DynamicStreamApp:
         RESUME and RESOLVE states would re-deliver (at-least-once); run
         it once per state transition or only at RESOLVE."""
         payload = self.controller.persistence.retrieve(sideline_id)
-        df = self.controller.replay_df(self.spark, sideline_id).withColumn(
-            "route_id", F.lit(f"sideline-{sideline_id}")
-        )
+        df = self.controller.replay_df(self.spark, sideline_id)
         # observed metrics instead of a pre-count: the replay runs ONE
         # Spark job — row count + per-partition high-water marks ride
         # along with the sink write
-        route_id = f"sideline-{sideline_id}"
-        df, obs = observe_delivery(
-            df, self.topic.num_partitions, f"replay-{sideline_id}-{id(df)}"
-        )
-        write_sink_batch(df, self.out_dir)
-        per_part, n = delivery_from_observation(obs, self.topic.num_partitions)
-        self._hwm.record(route_id, per_part, n)
+        n = self._deliver(df, f"sideline-{sideline_id}", f"replay-{id(df)}")
         self.recorder.count(f"sideline.{sideline_id}.replayed", n)
         if payload is not None and payload.type is SidelineType.RESOLVE:
             self.controller.complete(sideline_id)
@@ -450,7 +425,7 @@ class DynamicStreamApp:
         self.controller._require(sideline_id, {SidelineType.RESUME, SidelineType.RESOLVE})
         route_id = f"sideline-{sideline_id}"
         max_routes = int(self.config["coordinator.max_concurrent_routes"])
-        if len(self._replay_queries) + 1 >= max_routes:  # +1: the firehose
+        if len(self._active_replays()) + 1 >= max_routes:  # +1: the firehose
             raise RuntimeError(f"coordinator.max_concurrent_routes={max_routes} reached")
         if policy is None:
             # throttle derived from config: replays get 1/10 of the
@@ -468,24 +443,8 @@ class DynamicStreamApp:
             payload = self.controller.persistence.retrieve(sideline_id)
             if payload is None:
                 return
-            cond = self.topic.offset_range_condition(
-                payload.start_offsets, payload.end_offsets
-            )
-            out = (
-                batch_df.filter(cond)
-                # coalesce to false, like SidelineController.replay_df: a
-                # NULL-predicate row was kept by the firehose, the replay
-                # must not deliver it again
-                .filter(F.coalesce(F.expr(payload.predicate_sql), F.lit(False)))
-                .withColumn("route_id", F.lit(route_id))
-            )
-            out, obs = observe_delivery(
-                out, self.topic.num_partitions, f"{route_id}-{batch_id}"
-            )
-            write_sink_batch(out, self.out_dir)
-            self._hwm.record(
-                route_id,
-                *delivery_from_observation(obs, self.topic.num_partitions),
+            self._deliver(
+                self.controller.replay_rows(payload, batch_df), route_id, batch_id
             )
             self.recorder.count(f"{route_id}.batches")
 
@@ -505,6 +464,15 @@ class DynamicStreamApp:
         self._replay_queries[route_id] = q
         return q
 
+    def _active_replays(self) -> dict[str, object]:
+        """The running replay queries by route id: a stopped query
+        (``stop()`` after completion, or failed) gives back its route
+        slot and lets reconciliation respawn its sideline."""
+        for route_id, q in list(self._replay_queries.items()):
+            if not q.isActive:
+                del self._replay_queries[route_id]
+        return self._replay_queries
+
     def replay_stream_complete(self, sideline_id: str) -> bool:
         """Bounded-stream completion check (T3,
         ``VirtualSpout.attemptToComplete`` ``VirtualSpout.java:554-614``):
@@ -516,16 +484,13 @@ class DynamicStreamApp:
             return True  # already completed + cleaned up
         if payload.type is not SidelineType.RESOLVE or payload.end_offsets is None:
             return False
-        route_id = f"sideline-{sideline_id}"
-        expected = self.topic.read_range(
-            self.spark, payload.start_offsets, payload.end_offsets
-        ).filter(F.expr(payload.predicate_sql))
         # expected side scans only the sideline's bounded offset window;
         # the replayed side is the in-memory delivery counter — the old
         # full-output count made completion polling O(history)
+        expected = self.controller.replay_rows(payload, self.topic.read(self.spark))
         expected_n = expected.count()
         self._ensure_hwm_warm()
-        return self._hwm.rows(route_id) >= expected_n
+        return self._hwm.rows(f"sideline-{sideline_id}") >= expected_n
 
     # -- observability (O10, SpoutPartitionProgressMonitor arithmetic) ------
 
@@ -661,7 +626,7 @@ class DynamicStreamApp:
         consumer-state arithmetic read this, independent of any declared
         ``output.fields`` projection."""
         return (
-            self.spark.read.schema(_OUT_SCHEMA)
+            self.spark.read.schema(SINK_SCHEMA)
             .parquet(self.out_dir)
             .drop("event_date")
         )
@@ -682,26 +647,11 @@ class DynamicStreamApp:
         return out
 
     def optimize_output(self, target_files: int = 1) -> None:
-        """Maintenance OPTIMIZE of the merged output table: each
-        (route_id, event_date) partition's per-micro-batch file spray is
-        rewritten down to ``target_files`` with (partition, offset)
-        clustering restored — the app-level twin of
-        :meth:`FileTopic.compact` /  :meth:`Firehose.compact_output`.
-        Call with the app CLOSED (no live firehose/replay queries): the
-        directory swap would race their appends."""
-        from storm_dynamic_spout_spark.operators.layout import write_clustered
-
-        if self._firehose is not None or self._replay_queries:
+        """Maintenance OPTIMIZE of the merged output table
+        (:func:`~storm_dynamic_spout_spark.streaming.firehose.compact_sink`
+        per (route_id, event_date) partition).  Call with the app CLOSED
+        (no live firehose/replay queries): the directory swap would race
+        their appends."""
+        if self._firehose is not None or self._active_replays():
             raise RuntimeError("optimize_output requires a closed app")
-        df = self.spark.read.schema(_OUT_SCHEMA).parquet(self.out_dir)
-        dirswap.swap_publish(
-            self.out_dir,
-            lambda tmp: write_clustered(
-                df,
-                tmp,
-                partition_by=["route_id", "event_date"],
-                cluster_by=["partition", "offset"],
-                target_files=target_files,
-                mode="overwrite",
-            ),
-        )
+        compact_sink(self.spark, self.out_dir, target_files)

@@ -27,15 +27,14 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from storm_dynamic_spout_spark.operators.layout import write_clustered
 from storm_dynamic_spout_spark.streaming import dirswap
-from storm_dynamic_spout_spark.streaming.file_topic import FileTopic
-from storm_dynamic_spout_spark.streaming.filter_chain import FilterChain
+from storm_dynamic_spout_spark.streaming.file_topic import TOPIC_SCHEMA, FileTopic
 from storm_dynamic_spout_spark.streaming.metrics import MetricsRecorder
 from storm_dynamic_spout_spark.streaming.sideline import (
     SidelineController,
-    SidelineType,
     FileWatchTrigger,
 )
 
@@ -48,6 +47,22 @@ from storm_dynamic_spout_spark.streaming.sideline import (
 #: serializes just the job-commit sections — the distributed task work of
 #: each batch is untouched.
 _SINK_WRITE_LOCK = threading.Lock()
+
+#: The sink table's columns: the topic record plus its two hive keys.
+#: ``route_id`` exists only in a routed table (the app's merged output);
+#: a standalone firehose writes none, and reads it back as NULL.  Built
+#: as a new list: StructType.add would mutate the shared TOPIC_SCHEMA.
+SINK_SCHEMA = T.StructType(
+    list(TOPIC_SCHEMA.fields)
+    + [
+        T.StructField("route_id", T.StringType()),
+        T.StructField("event_date", T.DateType()),
+    ]
+)
+
+
+def _sink_partitions(columns: list[str]) -> list[str]:
+    return [c for c in ("route_id", "event_date") if c in columns]
 
 
 def write_sink_batch(
@@ -67,29 +82,51 @@ def write_sink_batch(
     The hot streaming path lands batches *unsorted* (``cluster=False``):
     a per-micro-batch sort buys little — each batch covers a narrow
     offset span, so its row-group min/max stats are already tight — and
-    costs an extra stage every trigger. :meth:`Firehose.compact_output`
-    restores full ``(partition, offset)`` clustering at maintenance
-    time, the standard ingest-fast / OPTIMIZE-later split.
+    costs an extra stage every trigger. :func:`compact_sink` restores
+    full ``(partition, offset)`` clustering at maintenance time, the
+    standard ingest-fast / OPTIMIZE-later split.
     """
     out = df.withColumn("event_date", F.to_date("timestamp"))
     if route_id is not None and "route_id" not in out.columns:
         out = out.withColumn("route_id", F.lit(route_id))
-    parts = (["route_id", "event_date"] if "route_id" in out.columns
-             else ["event_date"])
     with _SINK_WRITE_LOCK:
         write_clustered(
-            out, path, partition_by=parts,
+            out, path, partition_by=_sink_partitions(out.columns),
             cluster_by=["partition", "offset"] if cluster else None,
             mode="append",
         )
 
 
+def compact_sink(spark: SparkSession, path: str, target_files: int = 1) -> None:
+    """Maintenance OPTIMIZE of a sink table: rewrite each hive partition's
+    per-micro-batch file spray down to ``target_files``, restoring the
+    ``(partition, offset)`` clustering, through a crash-safe directory
+    swap.  The partition keys are the ones :func:`write_sink_batch`
+    wrote: ``route_id`` only when the table holds ``route_id=`` dirs.
+    MUST NOT run while a stream appends to ``path`` (the swap would race
+    its appends); schedule it like any table OPTIMIZE."""
+    df = spark.read.schema(SINK_SCHEMA).parquet(path)
+    if not any(d.startswith("route_id=") for d in os.listdir(path)):
+        df = df.drop("route_id")
+    dirswap.swap_publish(
+        path,
+        lambda tmp: write_clustered(
+            df, tmp, partition_by=_sink_partitions(df.columns),
+            cluster_by=["partition", "offset"], target_files=target_files,
+            mode="overwrite",
+        ),
+    )
+
+
 class Firehose:
-    """The live route: FileTopic stream → chain.keep → sink dir.
+    """The live route: FileTopic stream → chain.keep → sink.
 
     ``output_dir`` receives the kept rows as parquet (the "default"
     output stream, ``DynamicSpout.java:552-563``); the checkpoint dir
     makes restarts at-least-once from the last committed batch.
+    ``sink(kept, batch_id)`` replaces the default delivery, a plain
+    :func:`write_sink_batch` into ``output_dir`` (the app passes its
+    retry split + tagged write + rollup merge).
     """
 
     def __init__(
@@ -101,7 +138,7 @@ class Firehose:
         checkpoint_dir: str,
         trigger: FileWatchTrigger | None = None,
         recorder: MetricsRecorder | None = None,
-        on_batch: Callable[[int], None] | None = None,
+        sink: Callable[[DataFrame, int], None] | None = None,
     ) -> None:
         self.spark = spark
         self.topic = topic
@@ -110,7 +147,7 @@ class Firehose:
         self.checkpoint_dir = checkpoint_dir
         self.trigger = trigger
         self.recorder = recorder or MetricsRecorder()
-        self.on_batch = on_batch
+        self.sink = sink
         self.query = None
         os.makedirs(output_dir, exist_ok=True)
         # heal a crashed append or compact_output swap; under the write
@@ -118,26 +155,17 @@ class Firehose:
         with _SINK_WRITE_LOCK:
             dirswap.recover_interrupted_swap(output_dir)
 
-    # -- the per-micro-batch control-plane preamble --
-    def _refresh_chain(self) -> FilterChain:
+    def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+        # the per-micro-batch control-plane preamble
         if self.trigger is not None:
             self.trigger.poll()
-        chain = FilterChain()
-        for sid in self.controller.persistence.list_ids():
-            payload = self.controller.persistence.retrieve(sid)
-            if payload and payload.type in (SidelineType.START, SidelineType.RESUME):
-                chain.add_step(sid, payload.predicate_sql)
-        # keep the controller's in-memory chain in sync for observers
-        self.controller.chain = chain
-        return chain
-
-    def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        chain = self._refresh_chain()
-        kept = chain.keep(batch_df)
-        write_sink_batch(kept, self.output_dir)
+        self.controller.load_sidelines()
+        kept = self.controller.chain.keep(batch_df)
+        if self.sink is None:
+            write_sink_batch(kept, self.output_dir)
+        else:
+            self.sink(kept, batch_id)
         self.recorder.count("firehose.batches")
-        if self.on_batch is not None:
-            self.on_batch(batch_id)
 
     def start(self, max_files_per_trigger: int | None = None, available_now: bool = False):
         stream = self.topic.read_stream(self.spark, max_files_per_trigger)
@@ -164,40 +192,14 @@ class Firehose:
 
     # -- reading the output stream (test-side collector) --
     def output(self) -> DataFrame:
-        from pyspark.sql import types as T
-
-        from storm_dynamic_spout_spark.streaming.file_topic import TOPIC_SCHEMA
-
-        schema = T.StructType(
-            list(TOPIC_SCHEMA.fields) + [T.StructField("event_date", T.DateType())]
-        )
         return (
-            self.spark.read.schema(schema)
+            self.spark.read.schema(SINK_SCHEMA)
             .parquet(self.output_dir)
-            .drop("event_date")
+            .drop("route_id", "event_date")
         )
 
     def compact_output(self, target_files: int = 1) -> None:
-        """Maintenance-window compaction of the sink: merge the many
-        per-micro-batch files inside each ``event_date`` partition down
-        to ``target_files``, preserving the (partition, offset)
-        clustering — the output-side twin of :meth:`FileTopic.compact`.
-        MUST NOT run while the firehose query is live (the swap would
-        race the stream's appends); schedule it like any table OPTIMIZE.
-        """
-        from pyspark.sql import types as T
-
-        from storm_dynamic_spout_spark.streaming.file_topic import TOPIC_SCHEMA
-
-        schema = T.StructType(
-            list(TOPIC_SCHEMA.fields) + [T.StructField("event_date", T.DateType())]
-        )
-        df = self.spark.read.schema(schema).parquet(self.output_dir)
-        dirswap.swap_publish(
-            self.output_dir,
-            lambda tmp: write_clustered(
-                df, tmp, partition_by=["event_date"],
-                cluster_by=["partition", "offset"], target_files=target_files,
-                mode="overwrite",
-            ),
-        )
+        """:func:`compact_sink` over the output dir — the output-side
+        twin of :meth:`FileTopic.compact`.  MUST NOT run while the
+        firehose query is live."""
+        compact_sink(self.spark, self.output_dir, target_files)

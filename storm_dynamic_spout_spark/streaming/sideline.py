@@ -35,7 +35,6 @@ from enum import Enum
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from storm_dynamic_spout_spark.streaming.file_topic import FileTopic
 from storm_dynamic_spout_spark.streaming.filter_chain import FilterChain
@@ -174,8 +173,10 @@ class SidelineController:
 
     def start(self, request: SidelineRequest) -> SidelinePayload:
         """Capture current offsets, persist, add filter to the firehose
-        chain ⇒ the matching subset stops flowing next micro-batch."""
-        if self.chain.has_step(request.id):
+        chain ⇒ the matching subset stops flowing next micro-batch.  An
+        id with a persisted payload is rejected in every state: a START
+        over a RESOLVE would overwrite the window its replay still owes."""
+        if self.persistence.retrieve(request.id) is not None:
             raise ValueError(f"sideline already started: {request.id}")
         payload = SidelinePayload(
             id=request.id,
@@ -237,34 +238,40 @@ class SidelineController:
         payload = self._require(
             sideline_id, {SidelineType.RESUME, SidelineType.RESOLVE}
         )
-        df = self.topic.read_range(
-            spark, start_offsets=payload.start_offsets, end_offsets=payload.end_offsets
+        return self.replay_rows(payload, self.topic.read(spark))
+
+    def replay_rows(self, payload: SidelinePayload, df: DataFrame) -> DataFrame:
+        """The rows of ``df`` (a topic read or a stream micro-batch) that
+        the sideline owes: offset window ``(start, end]`` AND the
+        predicate, through :meth:`FilterChain.drop` — a NULL-predicate
+        row was kept by the firehose, so the replay never delivers it a
+        second time."""
+        window = df.filter(
+            self.topic.offset_range_condition(payload.start_offsets, payload.end_offsets)
         )
-        # coalesce to false, mirroring FilterChain.drop_condition: a row
-        # where the predicate is NULL was KEPT by the firehose (not
-        # dropped), so the replay must not deliver it a second time —
-        # keep/replay partition every row exactly once
-        return df.filter(F.coalesce(F.expr(payload.predicate_sql), F.lit(False)))
+        return FilterChain({payload.id: payload.predicate_sql}).drop(window)
 
     # -- reconciliation -----------------------------------------------------
 
     def load_sidelines(self) -> list[SidelinePayload]:
-        """Startup reconciliation: re-apply firehose filters for every
-        unresolved sideline (START and RESUME keep filtering; RESOLVE
-        does not), return payloads whose replays must be (re)spawned
-        (RESUME + RESOLVE). Call before starting the firehose — the
-        reference starts the firehose last for the same race-avoidance
-        (``SidelineSpoutHandler.java:176-219``)."""
+        """Rebuild the firehose chain from the persisted payloads (START
+        and RESUME filter; RESOLVE does not, also when another process
+        resolved it) and return the payloads whose replays must be
+        (re)spawned (RESUME + RESOLVE).  The firehose calls this at the
+        top of every micro-batch; startup reconciliation calls it before
+        starting the firehose — the reference starts the firehose last
+        for the same race-avoidance (``SidelineSpoutHandler.java:176-219``)."""
+        chain = FilterChain()
         to_replay: list[SidelinePayload] = []
         for sid in self.persistence.list_ids():
             payload = self.persistence.retrieve(sid)
             if payload is None:
                 continue
             if payload.type in (SidelineType.START, SidelineType.RESUME):
-                if not self.chain.has_step(sid):
-                    self.chain.add_step(sid, payload.predicate_sql)
+                chain.add_step(sid, payload.predicate_sql)
             if payload.type in (SidelineType.RESUME, SidelineType.RESOLVE):
                 to_replay.append(payload)
+        self.chain = chain
         return to_replay
 
 

@@ -8,7 +8,7 @@ Each test pins one of the five adjudicated defects:
    (delivered by exactly one path, never zero).
 3. RetryTableRunner must classify every candidate row ok-or-failed even
    when the failure predicate evaluates to NULL.
-4. Building _OUT_SCHEMA / retry schemas must not mutate the shared
+4. Building SINK_SCHEMA / retry schemas must not mutate the shared
    TOPIC_SCHEMA (StructType.add mutates in place).
 5. FileTopic.append crash between data write and offset persist must not
    reassign offsets (no duplicate (partition, offset) rows ever).
@@ -71,9 +71,13 @@ def test_filter_chain_null_predicate_rows_are_kept(spark, tmp_path):
 
 
 def test_sideline_replay_excludes_null_predicate_rows(spark, tmp_path):
-    topic = _topic_with_null_key(tmp_path)
-    chain = FilterChain()
-    ctl = SidelineController(topic, chain, str(tmp_path / "state"))
+    from storm_dynamic_spout_spark.streaming.app import DynamicStreamApp
+
+    app = DynamicStreamApp(
+        spark, str(tmp_path / "t"), str(tmp_path / "w"), num_partitions=2
+    )
+    app.produce([("tenant-x", "a"), ("tenant-y", "b"), (None, "null-key-row")])
+    topic, ctl = app.topic, app.controller
 
     # START before any rows existed would need an empty topic; here the
     # window (start=-1, end=latest] covers all three rows
@@ -82,7 +86,7 @@ def test_sideline_replay_excludes_null_predicate_rows(spark, tmp_path):
     ctl.persistence.persist(payload)
 
     # firehose view while the sideline filter is ACTIVE
-    firehose_rows = {r["value"] for r in chain.keep(topic.read(spark)).collect()}
+    firehose_rows = {r["value"] for r in ctl.chain.keep(topic.read(spark)).collect()}
 
     ctl.resume("s1")
     ctl.resolve("s1")
@@ -94,6 +98,17 @@ def test_sideline_replay_excludes_null_predicate_rows(spark, tmp_path):
     assert replay_rows == {"a"}
     assert firehose_rows | replay_rows == {"a", "b", "null-key-row"}
     assert firehose_rows & replay_rows == set()
+
+    # the streaming replay over the same window delivers the same set
+    q = app.start_replay_stream("s1")
+    try:
+        q.processAllAvailable()
+    finally:
+        app.close()
+    stream_rows = [
+        r["value"] for r in app.output().filter("route_id = 'sideline-s1'").collect()
+    ]
+    assert sorted(stream_rows) == sorted(replay_rows)
 
 
 # -- 3. retry classification under NULL failure predicate -------------------
@@ -124,8 +139,8 @@ def test_retry_runner_null_failure_condition_routes_to_ok(spark, tmp_path):
 
 
 def test_topic_schema_not_mutated_by_imports_or_retry(spark, tmp_path):
-    # importing the app module builds _OUT_SCHEMA; must not grow TOPIC_SCHEMA
-    import storm_dynamic_spout_spark.streaming.app as app_mod
+    # importing the firehose module builds SINK_SCHEMA; must not grow TOPIC_SCHEMA
+    import storm_dynamic_spout_spark.streaming.firehose as firehose_mod
 
     assert [f.name for f in TOPIC_SCHEMA.fields] == [
         "partition",
@@ -134,7 +149,7 @@ def test_topic_schema_not_mutated_by_imports_or_retry(spark, tmp_path):
         "value",
         "timestamp",
     ]
-    assert [f.name for f in app_mod._OUT_SCHEMA.fields][-2:] == [
+    assert [f.name for f in firehose_mod.SINK_SCHEMA.fields][-2:] == [
         "route_id",
         "event_date",
     ]

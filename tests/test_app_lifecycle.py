@@ -4,6 +4,8 @@ including restart reconciliation mid-sideline."""
 
 from __future__ import annotations
 
+import pytest
+
 from storm_dynamic_spout_spark.streaming.app import DynamicStreamApp
 
 
@@ -322,3 +324,55 @@ def test_highwater_survives_restart_via_cold_scan(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup("hwm-probe-2")) == []
+
+
+def test_stopped_replay_stream_frees_its_route_slot(spark, tmp_path):
+    """coordinator.max_concurrent_routes caps LIVE queries: a running
+    replay holds its slot, a stopped one gives it back (and no longer
+    blocks optimize_output)."""
+    from storm_dynamic_spout_spark.engine import EngineConfig
+
+    app = DynamicStreamApp(
+        spark, str(tmp_path / "t"), str(tmp_path / "w"),
+        config=EngineConfig({"coordinator.max_concurrent_routes": 2}),
+    )
+    app.produce([("x", "x0")])
+    for sid in ("s1", "s2"):
+        app.sideline_start(sid, f"key = '{sid}'")
+        app.sideline_resume(sid)
+    try:
+        q1 = app.start_replay_stream("s1")
+        with pytest.raises(RuntimeError):  # firehose + s1 fill the cap
+            app.start_replay_stream("s2")
+        q1.stop()
+        q2 = app.start_replay_stream("s2")
+        assert q2.isActive
+        q2.stop()
+        app.optimize_output()
+    finally:
+        app.close()
+
+
+def test_reconcile_respawns_a_stopped_replay_stream(spark, tmp_path):
+    """A RESUMEd sideline whose replay stream was stopped has no running
+    replay: reconciliation respawns it, and the rows it owes arrive."""
+    app = DynamicStreamApp(spark, str(tmp_path / "t"), str(tmp_path / "w"))
+    app.open()
+    try:
+        app.sideline_start("sx", "key = 'x'")
+        app.produce([("x", "x1"), ("a", "a1")])
+        app.process_all_available()
+        app.sideline_resume("sx")
+        q = app.start_replay_stream("sx")
+        q.processAllAvailable()
+        q.stop()
+        app.produce([("x", "x2")])  # still filtered from the firehose
+        app.process_all_available()
+
+        assert app.reconcile_sidelines() == ["sideline-sx"]
+        respawned = app._replay_queries["sideline-sx"]
+        assert respawned.isActive
+        respawned.processAllAvailable()
+        assert _vals(app.output(), "sideline-sx") == ["x1", "x2"]
+    finally:
+        app.close()

@@ -143,6 +143,31 @@ def test_reconciliation_reapplies_filters(tmp_path, topic):
     assert sorted(p.id for p in to_replay) == ["replaying", "resolved"]
 
 
+def test_start_rejects_a_sideline_still_resolving(spark, topic, controller):
+    """A second START before complete() must not overwrite the RESOLVE
+    payload: that would drop the window the replay still owes."""
+    topic.append([("tenant-x", "x1")])
+    controller.start(SidelineRequest("s1", "key = 'tenant-x'"))
+    topic.append([("tenant-x", "x2"), ("tenant-x", "x3")])
+    resolved = controller.resolve("s1")
+    with pytest.raises(ValueError):
+        controller.start(SidelineRequest("s1", "key = 'tenant-x'"))
+    assert controller.persistence.retrieve("s1") == resolved
+    assert _values(controller.replay_df(spark, "s1")) == ["x2", "x3"]
+
+
+def test_reload_drops_a_filter_resolved_by_another_process(tmp_path, topic):
+    state_dir = str(tmp_path / "state")
+    running = SidelineController(topic, FilterChain(), state_dir)
+    other = SidelineController(topic, FilterChain(), state_dir)
+    other.start(SidelineRequest("s1", "key = 'a'"))
+    running.load_sidelines()
+    assert running.chain.has_step("s1")
+    other.resolve("s1")
+    assert [p.id for p in running.load_sidelines()] == ["s1"]
+    assert not running.chain.has_step("s1")
+
+
 def test_retry_table_routing(spark):
     policy = ExponentialBackoffRetryPolicy(
         retry_limit=2, initial_delay_ms=1000, delay_multiplier=2.0, max_delay_ms=60_000
